@@ -40,7 +40,6 @@ from pyspark.sql.types import (
 
 from payor_mdm_spark.config import ABBREVS, FIELD_WEIGHTS
 from payor_mdm_spark.functions import similarity as sim
-from payor_mdm_spark.functions.similarity import _kernel_cache
 from payor_mdm_spark.functions.phonetic import phonetic_equal
 
 STRING_SCORES_SCHEMA = StructType(
@@ -55,7 +54,7 @@ STRING_SCORES_SCHEMA = StructType(
 )
 
 
-def _route_name_impl(
+def route_name(
     a: str, b: str, abbrevs: dict[str, str] | None = None,
     jw: float | None = None, tri: float | None = None,
 ) -> tuple[float, str]:
@@ -95,17 +94,7 @@ def _route_name_impl(
     return results[winner], winner
 
 
-@_kernel_cache
-def route_name(a: str, b: str) -> tuple[float, str]:
-    """Default-table router (memoized: a record participates in many
-    candidate pairs, so the same (a, b) name pair recurs within a Python
-    worker; the per-name sub-kernels are additionally memoized in
-    functions/similarity.py). Custom-table calls go through
-    _route_name_impl directly — dicts are not cache keys."""
-    return _route_name_impl(a, b)
-
-
-def _route_addr_impl(
+def route_addr(
     a: str, b: str,
     jw_num: float | None = None, jw_name: float | None = None,
     jw_nrm: float | None = None,
@@ -133,11 +122,6 @@ def _route_addr_impl(
         results["ADDR_JAC"] = sim.addr_jaccard(a, b)
     winner = max(results, key=results.get)
     return results[winner], winner
-
-
-@_kernel_cache
-def route_addr(a: str, b: str) -> tuple[float, str]:
-    return _route_addr_impl(a, b)
 
 
 def score_tax(a: str | None, b: str | None) -> tuple[float | None, str | None]:
@@ -192,11 +176,13 @@ def _string_scores_batch(
     na_l, nb_l = name_a.tolist(), name_b.tolist()
     aa_l, ab_l = addr_a.tolist(), addr_b.tolist()
     ta_l, tb_l = tax_a.tolist(), tax_b.tolist()
-    # per-batch memos: repeated (a, b) pairs within one Arrow batch are
-    # common (a record's candidate pairs are adjacent after the repartition
-    # on id_a); the dicts die with the batch, so the working set stays hot
-    # and bounded (see _kernel_cache docstring for why cross-batch caches
-    # are default-off)
+    # per-batch memos, not cross-batch caches: repeated (a, b) pairs within
+    # one Arrow batch are common (a record takes part in many candidate
+    # pairs), and the dicts die with the batch, so the working set stays
+    # young and bounded. Cross-batch lru caches of string-keyed results were
+    # measured harmful: on 32 concurrent workers they turned the kernels'
+    # cache-resident loops into random DRAM probes (4M-distinct-pair scoring
+    # fell from 163k to 43k pairs/s at local[32]).
     name_memo: dict = {}
 
     # pass 1: normalize names, take the identical fast path, collect the
@@ -242,7 +228,7 @@ def _string_scores_batch(
     # same ratio arithmetic (mn/mx, not a rearranged comparison), same
     # first-max-in-insertion-order tie-break — and only the minority
     # routes (abbrev / short / low-ratio / non-ASCII fallback) pay the
-    # _route_name_impl call.
+    # route_name call.
     abbrev_memo: dict = {}
 
     def _has_abbrev(u: str) -> bool:
@@ -275,7 +261,7 @@ def _string_scores_batch(
             ):
                 hit = (tri, "NAME_NGR") if tri > jw else (jw, "NAME_JW")
             else:
-                hit = _route_name_impl(ua, ub, abbrevs, jw=jw, tri=tri)
+                hit = route_name(ua, ub, abbrevs, jw=jw, tri=tri)
             name_memo[key] = hit
         ns_out[i], nst_out[i] = hit
     # addr pass 1: fast paths; group the rows needing the router by
@@ -372,11 +358,11 @@ def _string_scores_batch(
     for (ua, ub), rows in pending.items():
         slots = req_slots.get((ua, ub))
         if slots is None:
-            hit = _route_addr_impl(
+            hit = route_addr(
                 ua, ub, info_a=_info(ua), info_b=_info(ub)
             )
         else:
-            hit = _route_addr_impl(
+            hit = route_addr(
                 ua, ub,
                 jw_num=_pre(slots, "num"),
                 jw_name=_pre(slots, "name"),

@@ -17,8 +17,6 @@ behavior we ship).
 
 from __future__ import annotations
 
-from payor_mdm_spark.functions.similarity import _kernel_cache
-
 VOWELS = frozenset("AEIOUY")
 
 
@@ -30,7 +28,6 @@ def _slavo_germanic(s: str) -> bool:
     return any(x in s for x in ("W", "K", "CZ", "WITZ"))
 
 
-@_kernel_cache
 def double_metaphone(value: str | None) -> tuple[str, str]:
     """Return (primary, secondary) codes; secondary == primary when no
     alternate pronunciation exists (mirrors the common library behavior of

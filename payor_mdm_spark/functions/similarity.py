@@ -36,27 +36,6 @@ from payor_mdm_spark.functions.native_kernels import (
 _DIGITS_RE = re.compile(r"[^0-9]")
 
 
-def _kernel_cache(fn):
-    """Optional cross-batch lru_cache, sized by PAYOR_MDM_KERNEL_CACHE.
-
-    DEFAULT OFF: measured on 32 concurrent workers, cross-batch caches of
-    string-keyed results turn the kernels from tight cache-resident loops
-    into random DRAM probes — 4M-distinct-pair scoring collapsed from 163k
-    pairs/s (no cache) to 43k pairs/s (8k-entry caches) at local[32], while
-    scaling 8->32 went from 2.45x to inverse. Within-batch repetition (the
-    real win: a record's ~20 candidate pairs are adjacent after the
-    repartition on id_a) is captured instead by PER-BATCH dict memos inside
-    the pandas UDF (functions/ensemble.py), whose working set stays young
-    and bounded by the Arrow batch.
-    """
-    import os
-    from functools import lru_cache as _lru
-
-    size = int(os.environ.get("PAYOR_MDM_KERNEL_CACHE", "0"))
-    return _lru(maxsize=size)(fn) if size > 0 else fn
-
-
-
 def digits_only(s: str | None) -> str:
     return _DIGITS_RE.sub("", s) if s else ""
 
@@ -132,7 +111,6 @@ def name_jw(a: str, b: str) -> float:
     return round(jaro_winkler(a, b), 4)
 
 
-@_kernel_cache
 def _token_sorted(s: str) -> str:
     return " ".join(sorted(s.split()))
 
@@ -143,23 +121,17 @@ def token_sort_ratio(a: str, b: str) -> float:
     )
 
 
-@_kernel_cache
-def expand_abbrevs(name: str) -> str:
-    return " ".join(ABBREVS.get(t, t) for t in name.split())
-
-
-def expand_abbrevs_with(name: str, abbrevs: dict[str, str] | None) -> str:
-    """expand_abbrevs against an explicit table (ABBREVIATION_DICT-as-data,
-    12_abbreviation_dict.sql:49-75 — stewards extend the dict without a
-    code change). None -> the config constant (cached path)."""
-    if abbrevs is None:
-        return expand_abbrevs(name)
-    return " ".join(abbrevs.get(t, t) for t in name.split())
+def expand_abbrevs(name: str, abbrevs: dict[str, str] | None = None) -> str:
+    """Expand abbreviation tokens against an explicit table
+    (ABBREVIATION_DICT-as-data, 12_abbreviation_dict.sql:49-75 — stewards
+    extend the dict without a code change). None -> config.ABBREVS."""
+    table = ABBREVS if abbrevs is None else abbrevs
+    return " ".join(table.get(t, t) for t in name.split())
 
 
 def name_abr(a: str, b: str, abbrevs: dict[str, str] | None = None) -> float:
     return round(
-        jaro_winkler(expand_abbrevs_with(a, abbrevs), expand_abbrevs_with(b, abbrevs)),
+        jaro_winkler(expand_abbrevs(a, abbrevs), expand_abbrevs(b, abbrevs)),
         4,
     )
 
@@ -168,7 +140,6 @@ def _ngrams(s: str, n: int = 3) -> list[str]:
     return [s[i : i + n] for i in range(len(s) - n + 1)] if len(s) >= n else [s]
 
 
-@_kernel_cache
 def _trigram_profile(s: str) -> tuple[Counter, float]:
     c = Counter(_ngrams(s))
     return c, math.sqrt(sum(v * v for v in c.values()))

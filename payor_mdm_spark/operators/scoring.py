@@ -7,8 +7,8 @@ by deterministic rules (DET-1 exact-key, DET-2 cms-analog, DET-3 name+state;
 pairs, the weighted composite otherwise (:76-79).
 
 Spark-first performance choices (SURVEY §4):
-* the pair table is repartitioned on (source_record_id_a) before scoring so
-  the Arrow batches of the pandas UDF are well-shaped and co-located;
+* scoring adds no shuffle of its own: the pandas UDF runs over the
+  partitions the rehydration joins produce;
 * DET pairs do NOT pay the string-kernel cost for their decision — but the
   ensemble still runs on all pairs because the reference exposes per-field
   scores for every pair (int_match_scored.sql:69-73); the expensive string
@@ -74,6 +74,19 @@ def det_rule_col() -> F.Column:
     )
 
 
+def _geo_contradiction(prefix: str = "") -> F.Column:
+    """An explicit geographic CONTRADICTION between the pair's sides: state,
+    city or zip5 known on both sides and different. Null-safe on purpose —
+    missing geography is absence of evidence, not a contradiction. Reads
+    ``{prefix}{field}_a`` / ``{prefix}{field}_b``."""
+
+    def _mismatch(field: str) -> F.Column:
+        a, b = F.col(f"{prefix}{field}_a"), F.col(f"{prefix}{field}_b")
+        return a.isNotNull() & b.isNotNull() & (a != b)
+
+    return _mismatch("state_code") | _mismatch("city") | _mismatch("zip_code")
+
+
 def add_geo_contradiction(scored: DataFrame, staged: DataFrame) -> DataFrame:
     """Backfill ``geo_contradiction`` onto a scored-pairs frame that predates
     the column (a store committed before the borderline geo gate landed).
@@ -100,27 +113,15 @@ def add_geo_contradiction(scored: DataFrame, staged: DataFrame) -> DataFrame:
         F.col("city").alias("_geo_city_b"),
         F.col("zip_code").alias("_geo_zip_code_b"),
     )
-
-    def _mm(field: str) -> F.Column:
-        return (
-            F.col(f"_geo_{field}_a").isNotNull()
-            & F.col(f"_geo_{field}_b").isNotNull()
-            & (F.col(f"_geo_{field}_a") != F.col(f"_geo_{field}_b"))
-        )
-
     return (
         scored.join(a, "source_record_id_a").join(b, "source_record_id_b")
-        .withColumn(
-            "geo_contradiction",
-            _mm("state_code") | _mm("city") | _mm("zip_code"),
-        )
+        .withColumn("geo_contradiction", _geo_contradiction("_geo_"))
         .drop("_geo_state_code_a", "_geo_city_a", "_geo_zip_code_a",
               "_geo_state_code_b", "_geo_city_b", "_geo_zip_code_b")
     )
 
 
 def score_pairs(pairs: DataFrame, staged: DataFrame,
-                shuffle_partitions: int | None = None,
                 abbrevs: dict[str, str] | None = None) -> DataFrame:
     """Blocking pairs + staged records -> scored pairs.
 
@@ -128,10 +129,7 @@ def score_pairs(pairs: DataFrame, staged: DataFrame,
     config.ABBREVS). The pipeline threads the seeded ABBREVIATION_DICT
     table through here so steward MERGE upserts change match results
     without a code change (sources/steward.seed_abbreviation_dict)."""
-    df = rehydrate_pairs(pairs, staged)
-    if shuffle_partitions:
-        df = df.repartition(shuffle_partitions, "source_record_id_a")
-    df = df.withColumn("match_rule", det_rule_col())
+    df = rehydrate_pairs(pairs, staged).withColumn("match_rule", det_rule_col())
     df = (
         df.withColumn("name_a", F.col("name_norm_a"))
         .withColumn("name_b", F.col("name_norm_b"))
@@ -143,13 +141,6 @@ def score_pairs(pairs: DataFrame, staged: DataFrame,
         "overall_score",
         F.when(F.col("match_rule") != "FUZZY", F.lit(1.0)).otherwise(F.col("composite")),
     )
-    def _mismatch(field: str) -> F.Column:
-        return (
-            F.col(f"{field}_a").isNotNull()
-            & F.col(f"{field}_b").isNotNull()
-            & (F.col(f"{field}_a") != F.col(f"{field}_b"))
-        )
-
     return scored.select(
         "source_record_id_a", "source_record_id_b", "match_rule",
         "matched_block_keys",
@@ -164,9 +155,6 @@ def score_pairs(pairs: DataFrame, staged: DataFrame,
         F.col("score_exact_key_2"),
         "overall_score",
         "winning_name_strategy", "winning_addr_strategy", "strategies_used",
-        # second factor for borderline automatches: an explicit geographic
-        # CONTRADICTION (both sides known, different). Null-safe on purpose —
-        # missing geography is absence of evidence, not a contradiction.
-        (_mismatch("state_code") | _mismatch("city") | _mismatch("zip_code"))
-        .alias("geo_contradiction"),
+        # second factor for borderline automatches
+        _geo_contradiction().alias("geo_contradiction"),
     )

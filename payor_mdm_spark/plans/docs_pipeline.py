@@ -20,24 +20,16 @@ bit-identical — pinned by tests/test_docs_pipeline.py.
 
 from __future__ import annotations
 
-import time
-from dataclasses import dataclass, field
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from payor_mdm_spark.plans.stages import RunResult, StageRunner
 from payor_mdm_spark.sources.catalog import CheckpointStore
 
 DOC_STAGES = (
     "doc_stats", "doc_filtered", "doc_exact", "doc_clusters", "doc_keepers",
     "doc_splits", "doc_packed",
 )
-
-
-@dataclass
-class DocsRunResult:
-    tables: dict[str, DataFrame]
-    metrics: list[dict] = field(default_factory=list)
 
 
 def run_docs_pipeline(
@@ -51,7 +43,7 @@ def run_docs_pipeline(
     resume: bool = False,
     collect_metrics: bool = True,
     run_ts: str = "2026-01-01 00:00:00",
-) -> DocsRunResult:
+) -> RunResult:
     from payor_mdm_spark.operators.dedup import (
         dedup_clusters, exact_dedup, minhash_dedup_pairs,
     )
@@ -60,86 +52,54 @@ def run_docs_pipeline(
         split_assignment_col,
     )
 
-    result = DocsRunResult(tables={})
+    runner = StageRunner(spark, store, run_ts, resume, collect_metrics,
+                         "docs_run_metrics")
 
-    def stage(name: str, build):
-        t0 = time.time()
-        if resume and store.exists(name):
-            df = store.read(name)
-            skipped = True
-        else:
-            df = build()
-            store.write(name, df)
-            df = store.read(name)
-            skipped = False
-        result.tables[name] = df
-        if collect_metrics:
-            parts = store.commit_stats(name)
-            result.metrics.append(
-                {
-                    "stage": name,
-                    "rows": sum(n for _, n in parts),
-                    "seconds": round(time.time() - t0, 3),
-                    "skipped": skipped,
-                    "run_ts": run_ts,
-                }
-            )
-        return df
-
-    stats = stage(
+    stats = runner.run(
         "doc_stats",
         lambda: analyze_documents(docs).join(
             repetition_signals(docs), "doc_id"
         ),
     )
-    filtered = stage(
+    filtered = runner.run(
         "doc_filtered",
         lambda: stats.filter(
             (F.col("quality_score") >= quality_threshold)
             & (F.col("dup_ngram_ratio") <= max_dup_ngram_ratio)
         ).withColumn("text", redact_pii_col(F.col("text"))),
     )
-    exact = stage("doc_exact", lambda: exact_dedup(filtered))
+    exact = runner.run("doc_exact", lambda: exact_dedup(filtered))
 
     # near-dup transitive clusters persisted as their own stage: the
     # cluster->root map is the state the INCREMENTAL path needs to decide
     # whether a delta doc joins (or merges) existing clusters
-    clusters = stage(
+    clusters = runner.run(
         "doc_clusters",
         lambda: dedup_clusters(
             exact.select("doc_id"),
             minhash_dedup_pairs(exact, jaccard_threshold=jaccard_threshold),
         ),
     )
-    keepers = stage(
+    keepers = runner.run(
         "doc_keepers",
         lambda: exact.join(
             clusters.filter("is_keeper").select("doc_id"), "doc_id", "semi"
         ),
     )
-    splits = stage(
+    splits = runner.run(
         "doc_splits",
         lambda: keepers.withColumn(
             "split", split_assignment_col(F.col("doc_id"))
         ),
     )
-    stage(
+    runner.run(
         "doc_packed",
         lambda: pack_sequences(
             splits.filter(F.col("split") == "train"), budget_tokens
         ),
     )
 
-    if collect_metrics:
-        metrics_df = spark.createDataFrame(
-            [
-                (m["stage"], m["rows"], m["seconds"], m["skipped"], m["run_ts"])
-                for m in result.metrics
-            ],
-            "stage string, rows long, seconds double, skipped boolean, run_ts string",
-        )
-        store.write("docs_run_metrics", metrics_df)
-    return result
+    return runner.finish()
 
 
 def run_docs_incremental(
@@ -150,7 +110,7 @@ def run_docs_incremental(
     max_dup_ngram_ratio: float = 0.9,
     jaccard_threshold: float = 0.8,
     budget_tokens: int = 2048,
-) -> DocsRunResult:
+) -> RunResult:
     """Delta run of the training-corpus DAG against a completed batch run.
 
     The daily-crawl path: only the NEW documents are analyzed, filtered,
@@ -193,7 +153,7 @@ def run_docs_incremental(
         repetition_signals, split_assignment_col,
     )
 
-    result = DocsRunResult(tables={})
+    result = RunResult()
     delta_ids = new_docs.select("doc_id").distinct().localCheckpoint(eager=True)
     # crash-retry healing: a previous attempt may have committed SOME of
     # the derived tables (the doc_stats ledger lands LAST, so a retried

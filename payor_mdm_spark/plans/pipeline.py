@@ -3,9 +3,10 @@
 The Spark analog of ``dbt run`` over the reference DAG (SURVEY §3.1):
 staging(rollup) -> blocking -> scoring -> candidates -> match_groups ->
 {survivorship, xref} -> golden -> hierarchy, each stage ending in a
-checkpointed table write (resumable; north_rule). A per-stage metrics table
-(row counts, durations, per-stage lineage) is appended as the run progresses
-— the per-partition lineage/metrics requirement at scale.
+checkpointed table write (resumable; north_rule). Stages run through
+plans/stages.StageRunner, which writes the per-stage metrics tables (row
+counts, durations, per-partition lineage) once, after the last stage — the
+per-partition lineage/metrics requirement at scale.
 
 No wall-clock leaks into data: ``run_ts`` is stamped once per run and passed
 to every stage that needs a timestamp (vs the reference's per-row
@@ -13,9 +14,6 @@ current_timestamp(), match_candidates.sql:47).
 """
 
 from __future__ import annotations
-
-import time
-from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,18 +30,13 @@ from payor_mdm_spark.operators.rollup import rollup_conversations
 from payor_mdm_spark.operators.scoring import add_geo_contradiction, score_pairs
 from payor_mdm_spark.operators.staging import stage_records
 from payor_mdm_spark.operators.survivorship import survive_groups
+from payor_mdm_spark.plans.stages import RunResult, StageRunner
 from payor_mdm_spark.sources.catalog import CheckpointStore
 
 STAGES = (
     "staged", "blocking_pairs", "scored_pairs", "match_candidates",
     "match_groups", "survived", "golden", "xref", "hierarchy",
 )
-
-
-@dataclass
-class RunResult:
-    tables: dict[str, DataFrame]
-    metrics: list[dict] = field(default_factory=list)
 
 
 def run_pipeline(
@@ -56,72 +49,36 @@ def run_pipeline(
     hierarchy_overrides: DataFrame | None = None,
     survivorship_rules: dict[str, str] | None = None,
     max_block_size: int | None = None,
-    shuffle_partitions: int | None = None,
     collect_metrics: bool = True,
-    materialize_staging: bool = True,
 ) -> RunResult:
     """Run (or resume) the full DAG; every stage is checkpointed via
     ``store`` and downstream stages read the committed checkpoint, so a
     killed run restarts from the last completed stage."""
+    runner = StageRunner(spark, store, run_ts, resume, collect_metrics,
+                         "run_metrics", "partition_metrics")
+    _run_stages(runner, turns, steward_decisions, hierarchy_overrides,
+                survivorship_rules, max_block_size)
+    return runner.finish()
+
+
+def _run_stages(
+    runner: StageRunner,
+    turns: DataFrame,
+    steward_decisions: DataFrame | None,
+    hierarchy_overrides: DataFrame | None,
+    survivorship_rules: dict[str, str] | None,
+    max_block_size: int | None,
+) -> None:
+    """The ER DAG's stages, in commit order."""
     from payor_mdm_spark.config import MAX_BLOCK_SIZE
 
+    spark, store, run_ts = runner.spark, runner.store, runner.run_ts
     max_block = max_block_size or MAX_BLOCK_SIZE
-    result = RunResult(tables={})
-
-    partition_rows: list = []
-
-    def stage(name: str, build):
-        t0 = time.time()
-        if resume and store.exists(name):
-            df = store.read(name)
-            skipped = True
-        else:
-            df = build()
-            store.write(name, df)
-            df = store.read(name)  # downstream reads the committed snapshot
-            skipped = False
-        result.tables[name] = df
-        if collect_metrics:
-            # per-partition lineage (north_rule): row counts from the COMMIT
-            # itself — parquet footers / Iceberg manifest stats — never a
-            # second scan of the stage output (VERDICT r01 item 3: the old
-            # groupBy(spark_partition_id()).count() doubled read I/O at the
-            # 100 TB design point)
-            parts = store.commit_stats(name)
-            for pid, nrows in parts:
-                partition_rows.append((name, pid, nrows, run_ts))
-            result.metrics.append(
-                {
-                    "stage": name,
-                    "rows": sum(nrows for _, nrows in parts),
-                    "seconds": round(time.time() - t0, 3),
-                    "skipped": skipped,
-                    "run_ts": run_ts,
-                }
-            )
-        return df
-
-    if materialize_staging:
-        staged = stage(
-            "staged", lambda: stage_records(spark, rollup_conversations(turns))
-        )
-    else:
-        # reference parity: dbt materializes the staging layer as VIEWS
-        # (dbt_project.yml:18-20) — only match/master become tables. The
-        # cache must be EAGER: the blocking stage's single write job
-        # branches over staged 6+ ways, and an unmaterialized cache would
-        # re-execute the rollup lineage per branch.
-        t0 = time.time()
-        staged = stage_records(spark, rollup_conversations(turns)).cache()
-        staged.count()
-        if collect_metrics:
-            result.metrics.append(
-                {"stage": "staged(view)", "rows": staged.count(),
-                 "seconds": round(time.time() - t0, 3), "skipped": False,
-                 "run_ts": run_ts}
-            )
+    staged = runner.run(
+        "staged", lambda: stage_records(spark, rollup_conversations(turns))
+    )
     # staged is scanned by every blocking pass and both sides of the scoring
-    # rehydration join — cache it (committed snapshot or view) WITHOUT the
+    # rehydration join — cache the committed snapshot WITHOUT the
     # packed-turns payload: no downstream stage reads `turns` (it lives in
     # the committed staged table for the record contract), and columnar-
     # caching the full conversation text roughly doubled the blocking
@@ -129,8 +86,8 @@ def run_pipeline(
     # metadata travel, payloads don't; §5: caching competes with execution
     # memory).
     staged = staged.drop("turns").cache()
-    result.tables["staged"] = staged
-    pairs = stage(
+    runner.result.tables["staged"] = staged
+    pairs = runner.run(
         "blocking_pairs",
         lambda: candidate_pairs(staged, max_block_size=max_block),
     )
@@ -140,16 +97,14 @@ def run_pipeline(
     from payor_mdm_spark.sources.steward import load_abbreviation_dict
 
     abbrevs = load_abbreviation_dict(store)
-    scored = stage(
-        "scored_pairs",
-        lambda: score_pairs(pairs, staged, shuffle_partitions=shuffle_partitions,
-                            abbrevs=abbrevs),
+    scored = runner.run(
+        "scored_pairs", lambda: score_pairs(pairs, staged, abbrevs=abbrevs)
     )
-    candidates = stage(
+    candidates = runner.run(
         "match_candidates",
         lambda: build_candidates(scored, steward_decisions=steward_decisions, run_ts=run_ts),
     )
-    groups = stage(
+    groups = runner.run(
         "match_groups", lambda: build_match_groups(candidates, staged)
     )
     # rules-as-data: an explicit dict wins; otherwise the seeded
@@ -161,31 +116,17 @@ def run_pipeline(
             r["field_name"]: r["rule"]
             for r in store.read("survivorship_config").collect()
         }
-    survived = stage("survived", lambda: survive_groups(groups, staged, rules=rules))
-    golden = stage("golden", lambda: golden_records(survived, run_ts=run_ts))
-    xref = stage("xref", lambda: build_xref(groups, staged))
-    stage(
+    survived = runner.run(
+        "survived", lambda: survive_groups(groups, staged, rules=rules)
+    )
+    golden = runner.run("golden", lambda: golden_records(survived, run_ts=run_ts))
+    xref = runner.run("xref", lambda: build_xref(groups, staged))
+    runner.run(
         "hierarchy",
         lambda: apply_hierarchy_overrides(
             infer_hierarchy(staged, xref, golden), hierarchy_overrides
         ),
     )
-
-    if collect_metrics:
-        metrics_df = spark.createDataFrame(
-            [
-                (m["stage"], m["rows"], m["seconds"], m["skipped"], m["run_ts"])
-                for m in result.metrics
-            ],
-            "stage string, rows long, seconds double, skipped boolean, run_ts string",
-        )
-        store.write("run_metrics", metrics_df)
-        partition_df = spark.createDataFrame(
-            partition_rows,
-            "stage string, partition_id int, rows long, run_ts string",
-        )
-        store.write("partition_metrics", partition_df)
-    return result
 
 
 def audit_log(
@@ -221,7 +162,6 @@ def run_incremental(
     hierarchy_overrides: DataFrame | None = None,
     survivorship_rules: dict[str, str] | None = None,
     max_block_size: int | None = None,
-    shuffle_partitions: int | None = None,
     collect_metrics: bool = True,
 ) -> RunResult:
     """Process a conversation-granularity delta against an existing run.
@@ -298,7 +238,6 @@ def run_incremental(
         )
     )
     to_score = pairs.join(reusable.select(*keys), keys, "left_anti")
-    rescored_n = None
     if collect_metrics:
         # incremental lineage: how much Python-kernel work the delta cost —
         # counted BEFORE the scored swap (to_score's lineage reads the old
@@ -307,8 +246,7 @@ def run_incremental(
         rescored_n = to_score.count()
     from payor_mdm_spark.sources.steward import load_abbreviation_dict
 
-    fresh = score_pairs(to_score, staged, shuffle_partitions=shuffle_partitions,
-                        abbrevs=load_abbreviation_dict(store))
+    fresh = score_pairs(to_score, staged, abbrevs=load_abbreviation_dict(store))
     # Recompute geo_contradiction for ALL reused pairs (not just pre-upgrade
     # stores missing the column): the recompute is exact for reused pairs —
     # their staged attributes are unchanged by definition — and it makes a
@@ -327,42 +265,14 @@ def run_incremental(
         "hierarchy",
     ):
         store.drop(stg)
-    result = run_pipeline(
-        spark, delta_turns, store,
-        run_ts=run_ts, resume=True,
-        steward_decisions=steward_decisions,
-        hierarchy_overrides=hierarchy_overrides,
-        survivorship_rules=survivorship_rules,
-        max_block_size=max_block,
-        shuffle_partitions=shuffle_partitions,
-        collect_metrics=collect_metrics,
-    )
-    if collect_metrics and rescored_n is not None:
-        total_n = sum(n for _, n in store.commit_stats("scored_pairs"))
-        result.metrics.append(
-            {
-                "stage": "incremental_rescored_pairs",
-                "rows": rescored_n,
-                "seconds": 0.0,
-                "skipped": False,
-                "run_ts": run_ts,
-            }
-        )
-        result.metrics.append(
-            {
-                "stage": "incremental_reused_pairs",
-                "rows": total_n - rescored_n,
-                "seconds": 0.0,
-                "skipped": True,
-                "run_ts": run_ts,
-            }
-        )
-        metrics_df = spark.createDataFrame(
-            [
-                (m["stage"], m["rows"], m["seconds"], m["skipped"], m["run_ts"])
-                for m in result.metrics
-            ],
-            "stage string, rows long, seconds double, skipped boolean, run_ts string",
-        )
-        store.write("run_metrics", metrics_df)
-    return result
+    runner = StageRunner(spark, store, run_ts, True, collect_metrics,
+                         "run_metrics", "partition_metrics")
+    _run_stages(runner, delta_turns, steward_decisions, hierarchy_overrides,
+                survivorship_rules, max_block)
+    if collect_metrics:
+        total_n = next(m["rows"] for m in runner.result.metrics
+                       if m["stage"] == "scored_pairs")
+        runner.record("incremental_rescored_pairs", rescored_n, skipped=False)
+        runner.record("incremental_reused_pairs", total_n - rescored_n,
+                      skipped=True)
+    return runner.finish()

@@ -1,0 +1,106 @@
+"""The stage runner both checkpointed DAGs (ER and docs) share.
+
+Every stage runs the way a dbt model does under ``dbt run``: resume from
+its committed table or build it, commit it, and hand downstream stages the
+committed snapshot, so a killed run restarts from the last completed stage
+(north_rule). Per-stage lineage comes from the COMMIT itself (parquet
+footers / Iceberg manifest stats), never a second scan of the stage output
+(VERDICT r01 item 3: that doubled read I/O at the 100 TB design point).
+The metrics tables are written once, after the last stage.
+
+Catalog calls go through ``store`` by stage name, in a fixed order
+(exists, read or write + read, commit_stats): a tracing store charges
+Spark jobs to stages through exactly those calls.
+"""
+
+from __future__ import annotations
+
+import time
+from dataclasses import dataclass, field
+from typing import Callable
+
+from pyspark.sql import DataFrame, SparkSession
+
+from payor_mdm_spark.sources.catalog import CheckpointStore
+
+METRICS_SCHEMA = (
+    "stage string, rows long, seconds double, skipped boolean, run_ts string"
+)
+PARTITION_SCHEMA = "stage string, partition_id int, rows long, run_ts string"
+
+
+@dataclass
+class RunResult:
+    tables: dict[str, DataFrame] = field(default_factory=dict)
+    # one {"stage", "rows", "seconds", "skipped", "run_ts"} dict per row
+    metrics: list[dict] = field(default_factory=list)
+
+
+@dataclass
+class StageRunner:
+    """Runs one DAG's stages against ``store`` and collects their metrics:
+    one ``metrics_table`` row per stage (plus any ``record``ed row) and, when
+    ``partition_table`` is given, one row there per committed partition.
+    With ``collect_metrics`` off no commit stats are read and no metrics
+    table is written."""
+
+    spark: SparkSession
+    store: CheckpointStore
+    run_ts: str
+    resume: bool
+    collect_metrics: bool
+    metrics_table: str
+    partition_table: str | None = None
+    result: RunResult = field(default_factory=RunResult, init=False)
+    _partition_rows: list[tuple] = field(default_factory=list, init=False)
+
+    def run(self, name: str, build: Callable[[], DataFrame]) -> DataFrame:
+        """Resume or build stage ``name``; returns the committed snapshot."""
+        t0 = time.time()
+        skipped = self.resume and self.store.exists(name)
+        if not skipped:
+            self.store.write(name, build())
+        df = self.store.read(name)
+        self.result.tables[name] = df
+        if self.collect_metrics:
+            parts = self.store.commit_stats(name)
+            if self.partition_table:
+                self._partition_rows.extend(
+                    (name, pid, nrows, self.run_ts) for pid, nrows in parts
+                )
+            self.record(name, sum(nrows for _, nrows in parts), skipped,
+                        time.time() - t0)
+        return df
+
+    def record(self, stage: str, rows: int, skipped: bool,
+               seconds: float = 0.0) -> None:
+        """Add one metrics row, e.g. for a count taken outside any stage."""
+        self.result.metrics.append(
+            {
+                "stage": stage,
+                "rows": rows,
+                "seconds": round(seconds, 3),
+                "skipped": skipped,
+                "run_ts": self.run_ts,
+            }
+        )
+
+    def finish(self) -> RunResult:
+        """Write the metrics tables (once per run) and return the result."""
+        if self.collect_metrics:
+            cols = ("stage", "rows", "seconds", "skipped", "run_ts")
+            self.store.write(
+                self.metrics_table,
+                self.spark.createDataFrame(
+                    [tuple(m[c] for c in cols) for m in self.result.metrics],
+                    METRICS_SCHEMA,
+                ),
+            )
+            if self.partition_table:
+                self.store.write(
+                    self.partition_table,
+                    self.spark.createDataFrame(
+                        self._partition_rows, PARTITION_SCHEMA
+                    ),
+                )
+        return self.result

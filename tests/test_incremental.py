@@ -186,9 +186,19 @@ def test_incremental_metrics_report_reuse(spark, worlds, tmp_path):
     total = inc.tables["scored_pairs"].count()
     assert rescored + reused == total
     assert reused > 0 and rescored > 0
-    # persisted run_metrics carries the same rows
+    # persisted run_metrics carries the same rows: one write holds every
+    # stage plus the two incremental rows
     persisted = {r.stage: r.rows for r in store.read("run_metrics").collect()}
+    assert set(persisted) == set(STAGES) | {
+        "incremental_rescored_pairs", "incremental_reused_pairs",
+    }
     assert persisted["incremental_rescored_pairs"] == rescored
+    # partition lineage comes from the same commit stats as the stage rows
+    parts = {
+        r.stage: r.rows for r in store.read("partition_metrics")
+        .groupBy("stage").agg(F.sum("rows").alias("rows")).collect()
+    }
+    assert parts == {stg: persisted[stg] for stg in STAGES}
 
 
 def test_bridge_batch_replay_is_idempotent(spark, worlds, tmp_path):

@@ -156,27 +156,6 @@ def test_steward_override_flips_decision(spark, world, tmp_path):
     assert rows["a"] == "no_match" and rows["c"] == "match"
 
 
-def test_staging_view_mode_equivalent(spark, world, tmp_path):
-    """materialize_staging=False (the reference's staging-as-view
-    materialization, dbt_project.yml:18-20) must produce identical golden
-    output to the checkpointed default."""
-    from payor_mdm_spark.plans.pipeline import run_pipeline
-    from payor_mdm_spark.sources.catalog import CheckpointStore
-
-    turns = spark.read.parquet(world["turns_path"])
-    res = run_pipeline(
-        spark, turns, CheckpointStore(spark, str(tmp_path / "v")),
-        materialize_staging=False, collect_metrics=False,
-    )
-    got = {(r.master_entity_id, r.name_raw) for r in res.tables["golden"].collect()}
-    res2 = run_pipeline(
-        spark, turns, CheckpointStore(spark, str(tmp_path / "m")),
-        collect_metrics=False,
-    )
-    want = {(r.master_entity_id, r.name_raw) for r in res2.tables["golden"].collect()}
-    assert got == want
-
-
 def test_data_contracts_pass_and_catch_corruption(spark, pipeline_run, tmp_path):
     """dbt-test analog (plans/contracts.validate_store): all green on a
     healthy run; a corrupted table fails its check."""

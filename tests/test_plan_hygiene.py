@@ -139,3 +139,41 @@ def test_docs_pipeline_stage_plans_clean(spark):
         ("doc_keepers", keepers), ("doc_splits", splits), ("doc_packed", packed),
     ]:
         _assert_clean(name, df)
+
+
+# ---------------------------------------------------------------------------
+# No hidden knobs: only session.py reads the environment, and only for
+# deployment settings (master, driver memory, shuffle partitions). A behaviour
+# switch read from os.environ anywhere else is an option no caller or test
+# sees. Pure source scan, no Spark.
+# ---------------------------------------------------------------------------
+
+def _env_reads(path):
+    import ast
+
+    tree = ast.parse(open(path).read(), filename=path)
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Attribute)
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "os"
+            and node.attr in ("environ", "getenv")
+        ):
+            yield node.lineno
+        elif isinstance(node, ast.ImportFrom) and node.module == "os" and any(
+            a.name in ("environ", "getenv") for a in node.names
+        ):
+            yield node.lineno
+
+
+def test_only_session_reads_environment():
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "payor_mdm_spark"
+    offenders = [
+        f"{path.relative_to(pkg.parent)}:{line}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path.name != "session.py" or path.parent != pkg
+        for line in _env_reads(path)
+    ]
+    assert not offenders, f"environment read outside session.py: {offenders}"
