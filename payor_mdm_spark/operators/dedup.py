@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from payor_mdm_spark.operators.blocking import _pairs_within_blocks, _with_signature
+from payor_mdm_spark.operators.text_analysis import word_ngrams_col
 
 
 def exact_duplicates(docs: DataFrame, id_col: str = "doc_id",
@@ -58,15 +59,16 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def _word_ngrams(col: Column, n: int) -> Column:
-    toks = F.split(F.lower(col), r"\s+")
-    return F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", toks)))
+def _split_tokens(text: Column) -> Column:
+    """The n-gram tokenizer of the dedup passes. Unlike tokens_col it keeps
+    empty tokens (from leading/trailing whitespace)."""
+    return F.split(F.lower(text), r"\s+")
+
+
+def _word_ngrams(toks: Column, n: int) -> Column:
+    """Word n-grams of a projected _split_tokens column; a document of
+    fewer than n tokens is one gram, its tokens joined."""
+    return word_ngrams_col(toks, n, F.array(F.concat_ws(" ", toks)))
 
 
 def ngram_jaccard_pairs(
@@ -79,7 +81,9 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Exact word-n-gram Jaccard for given candidate pairs [id_a, id_b]."""
     grams = docs.select(
-        F.col(id_col), F.array_distinct(_word_ngrams(F.col(text_col), n)).alias("_g")
+        F.col(id_col), _split_tokens(F.col(text_col)).alias("_tok")
+    ).select(
+        F.col(id_col), F.array_distinct(_word_ngrams(F.col("_tok"), n)).alias("_g")
     )
     a = grams.select(F.col(id_col).alias("id_a"), F.col("_g").alias("_ga"))
     b = grams.select(F.col(id_col).alias("id_b"), F.col("_g").alias("_gb"))
@@ -579,10 +583,13 @@ def cross_corpus_contamination(
         .withColumn("jaccard", F.lit(1.0))
     )
 
-    tr_grams = tr.select(
-        "train_id",
-        F.explode(F.array_distinct(_word_ngrams(F.col("_tr_text"), n))).alias("_g"),
-    )
+    # explode the gram expression itself, not a projected gram column: a
+    # Generate over a plain column gets an inferred size(col) > 0 filter,
+    # which pushdown rewrites into a second copy of the gram expression
+    tr_tok = tr.select("train_id", _split_tokens(F.col("_tr_text")).alias("_tok"))
+    te_tok = te.select("test_id", _split_tokens(F.col("_te_text")).alias("_tok"))
+    grams = F.array_distinct(_word_ngrams(F.col("_tok"), n))
+    tr_grams = tr_tok.select("train_id", F.explode(grams).alias("_g"))
     hot = (
         tr_grams.groupBy("_g")
         .agg(F.count(F.lit(1)).alias("_df"))
@@ -590,18 +597,12 @@ def cross_corpus_contamination(
         .select("_g")
     )
     tr_grams = tr_grams.join(F.broadcast(hot), "_g", "left_anti")
-    te_grams = te.select(
-        "test_id",
-        F.explode(F.array_distinct(_word_ngrams(F.col("_te_text"), n))).alias("_g"),
-    )
+    te_grams = te_tok.select("test_id", F.explode(grams).alias("_g"))
     cands = tr_grams.join(te_grams, "_g").select("train_id", "test_id").distinct()
 
-    tr_sets = tr.select(
-        "train_id", F.array_distinct(_word_ngrams(F.col("_tr_text"), n)).alias("_ga")
-    )
-    te_sets = te.select(
-        "test_id", F.array_distinct(_word_ngrams(F.col("_te_text"), n)).alias("_gb")
-    )
+    tr_sets = tr_tok.select("train_id", grams.alias("_ga"))
+    te_sets = te_tok.select("test_id", grams.alias("_gb"))
+
     inter = F.size(F.array_intersect("_ga", "_gb")).cast("double")
     union = F.size(F.array_union("_ga", "_gb")).cast("double")
     near = (

@@ -4,7 +4,7 @@ The Spark expression of the reference's staging layer
 (/root/reference/transform/payor_mdm/models/staging/stg_*.sql): per-source
 trust ranks, name cleaning (legal-suffix strip), digits-only scrubs,
 single-line address parsing (split_part analog, stg_claims_payors.sql:56-64),
-full-state-name lookup via broadcast join (P10, stg_claims_payors.sql:2-18),
+full-state-name lookup via a literal map (P10, stg_claims_payors.sql:2-18),
 status booleans, lenient date casts, and persisted blocking keys
 (stg_payors_unioned.sql:42-51).
 
@@ -13,7 +13,7 @@ Everything is native column expressions — zero Python in this stage.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from payor_mdm_spark.config import SOURCE_TRUST_RANK, STATE_NAME_TO_CODE
@@ -24,19 +24,12 @@ from payor_mdm_spark.functions import textnorm as tn
 _SOURCE_RE = r"^conv-([a-z_]+)-"
 
 
-def _trust_rank_col() -> F.Column:
-    mapping = F.create_map(
-        *[F.lit(x) for kv in SOURCE_TRUST_RANK.items() for x in kv]
-    )
-    return mapping[F.col("source_system")]
+def _literal_map(mapping: dict) -> Column:
+    return F.create_map(*[F.lit(x) for kv in mapping.items() for x in kv])
 
 
-def state_lookup_df(spark: SparkSession) -> DataFrame:
-    """51-row state-name -> code map (P10); always broadcast."""
-    return spark.createDataFrame(
-        [(k, v) for k, v in STATE_NAME_TO_CODE.items()],
-        ["state_name_upper", "state_code_mapped"],
-    )
+def _trust_rank_col() -> Column:
+    return _literal_map(SOURCE_TRUST_RANK)[F.col("source_system")]
 
 
 def stage_records(spark: SparkSession, rolled: DataFrame) -> DataFrame:
@@ -80,17 +73,14 @@ def stage_records(spark: SparkSession, rolled: DataFrame) -> DataFrame:
     )
 
     # --- state normalization: 2-char codes pass through, full names resolve
-    # through the broadcast lookup (P8/P10) ---
-    lookup = F.broadcast(state_lookup_df(spark))
-    df = df.join(
-        lookup,
-        F.upper(F.col("state_raw")) == F.col("state_name_upper"),
-        "left",
-    ).withColumn(
+    # through the 51-entry name -> code map (P8/P10); a name not in the map,
+    # or a NULL state, gives NULL ---
+    state_raw = F.col("state_raw")
+    df = df.withColumn(
         "state_code",
-        F.when(F.length(F.col("state_raw")) == 2, tn.state2(F.col("state_raw")))
-        .otherwise(F.col("state_code_mapped")),
-    ).drop("state_name_upper", "state_code_mapped", "state_raw")
+        F.when(F.length(state_raw) == 2, tn.state2(state_raw))
+        .otherwise(_literal_map(STATE_NAME_TO_CODE)[F.upper(state_raw)]),
+    ).drop("state_raw")
 
     # --- contact / status / dates (P4, P8, P9, P11) ---
     df = df.withColumn("phone", tn.phone10(F.col("phone_raw")))

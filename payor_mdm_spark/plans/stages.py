@@ -86,21 +86,30 @@ class StageRunner:
         )
 
     def finish(self) -> RunResult:
-        """Write the metrics tables (once per run) and return the result."""
+        """Write the metrics tables (once per run) and return the result.
+
+        Each table is built from an Arrow table, so the rows reach the JVM
+        as Arrow batches and become a local relation. A list of tuples (or
+        an empty pandas frame) would be a Python RDD: one Python-worker job
+        per table."""
         if self.collect_metrics:
             cols = ("stage", "rows", "seconds", "skipped", "run_ts")
-            self.store.write(
+            self._write(
                 self.metrics_table,
-                self.spark.createDataFrame(
-                    [tuple(m[c] for c in cols) for m in self.result.metrics],
-                    METRICS_SCHEMA,
-                ),
+                [tuple(m[c] for c in cols) for m in self.result.metrics],
+                cols, METRICS_SCHEMA,
             )
             if self.partition_table:
-                self.store.write(
-                    self.partition_table,
-                    self.spark.createDataFrame(
-                        self._partition_rows, PARTITION_SCHEMA
-                    ),
+                self._write(
+                    self.partition_table, self._partition_rows,
+                    ("stage", "partition_id", "rows", "run_ts"),
+                    PARTITION_SCHEMA,
                 )
         return self.result
+
+    def _write(self, table: str, rows: list[tuple], cols: tuple[str, ...],
+               schema: str) -> None:
+        import pyarrow as pa
+
+        data = pa.table({c: [r[i] for r in rows] for i, c in enumerate(cols)})
+        self.store.write(table, self.spark.createDataFrame(data, schema))

@@ -142,6 +142,86 @@ def test_docs_pipeline_stage_plans_clean(spark):
 
 
 # ---------------------------------------------------------------------------
+# Word n-gram and shingle lambdas must slice a PROJECTED token column. A
+# tokenizer expression (split(...), or filter(split(...)) for tokens_col)
+# inside the lambda is re-evaluated per n-gram position — O(words^2) per
+# document — and shows up in the optimized plan as slice(split( or
+# slice(filter(split(.
+# ---------------------------------------------------------------------------
+
+def test_ngram_lambdas_slice_projected_tokens(spark):
+    import re
+
+    from payor_mdm_spark.operators.dedup import (
+        cross_corpus_contamination, ngram_jaccard_pairs,
+    )
+    from payor_mdm_spark.operators.text_analysis import (
+        analyze_documents, repetition_signals, top_ngrams,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "b c d e f g")], "doc_id long, text string"
+    )
+    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    frames = {
+        "analyze_documents": analyze_documents(docs),
+        "repetition_signals": repetition_signals(docs),
+        "top_ngrams": top_ngrams(docs),
+        "ngram_jaccard_pairs": ngram_jaccard_pairs(docs, pairs),
+        "cross_corpus_contamination": cross_corpus_contamination(docs, docs),
+    }
+    tokenizer_slice = re.compile(r"slice\((filter\()?split\(")
+    offenders = [
+        name for name, df in frames.items()
+        if tokenizer_slice.search(
+            df._jdf.queryExecution().optimizedPlan().toString()
+        )
+    ]
+    assert not offenders, f"n-gram lambda re-tokenizes the text: {offenders}"
+
+
+# ---------------------------------------------------------------------------
+# The run-metrics tables reach the JVM as Arrow batches (a local relation),
+# not as a Python RDD that costs a Python-worker job per table. Covers the
+# empty partition-rows case too.
+# ---------------------------------------------------------------------------
+
+def test_metrics_tables_are_local_relations(spark):
+    from payor_mdm_spark.plans.stages import StageRunner
+
+    class CaptureStore:
+        def __init__(self):
+            self.frames = {}
+
+        def write(self, name, df):
+            self.frames[name] = df
+
+    store = CaptureStore()
+    runner = StageRunner(spark, store, "2026-01-01 00:00:00", False, True,
+                         "run_metrics", "partition_metrics")
+    runner.record("staged", 7, False, 1.25)
+    runner.record("golden", 0, True)
+    runner.finish()
+
+    metrics, parts = store.frames["run_metrics"], store.frames["partition_metrics"]
+    for df in (metrics, parts):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.startswith("LocalRelation"), plan
+    assert metrics.schema.simpleString() == (
+        "struct<stage:string,rows:bigint,seconds:double,skipped:boolean,"
+        "run_ts:string>"
+    )
+    assert [tuple(r) for r in metrics.collect()] == [
+        ("staged", 7, 1.25, False, "2026-01-01 00:00:00"),
+        ("golden", 0, 0.0, True, "2026-01-01 00:00:00"),
+    ]
+    assert parts.schema.simpleString() == (
+        "struct<stage:string,partition_id:int,rows:bigint,run_ts:string>"
+    )
+    assert parts.count() == 0
+
+
+# ---------------------------------------------------------------------------
 # No hidden knobs: only session.py reads the environment, and only for
 # deployment settings (master, driver memory, shuffle partitions). A behaviour
 # switch read from os.environ anywhere else is an option no caller or test

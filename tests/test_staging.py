@@ -2,6 +2,7 @@
 
 import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from payor_mdm_spark.operators.rollup import rollup_conversations
@@ -60,7 +61,7 @@ def test_single_line_address_parse_with_full_state_name(spark):
     )
     assert r.addr_line_1 == "100 Main Street"
     assert r.city == "SPRINGFIELD"
-    assert r.state_code == "IL"       # broadcast state-name lookup (P10)
+    assert r.state_code == "IL"       # state-name map (P10)
     assert r.zip_code == "62704"
     assert r.zip_plus_4 == "1234"
     assert r.source_trust_rank == 2
@@ -79,6 +80,35 @@ def test_two_letter_state_and_blocking_keys(spark):
     assert r.block_name_key == "ACME H" + "DE"
     assert r.block_zip3_name4 == "199" + "ACME"
     assert r.block_exact_key is None
+
+
+@pytest.mark.parametrize(
+    "state, want",
+    [
+        ("Illinois", "IL"),
+        ("illinois", "IL"),      # names match case-insensitively
+        ("New York", "NY"),
+        ("DE", "DE"),            # 2-char codes pass through, upper-cased
+        ("de", "DE"),
+        ("Narnia", None),        # unknown name -> NULL
+        ("Illinoi", None),       # no prefix or fuzzy match
+    ],
+)
+def test_state_code_semantics(spark, state, want):
+    r = _stage_one(
+        spark,
+        [
+            ("Hi, I'm calling about Acme Health.", None),
+            ("ok", None),
+            (f"We are located at 1 Oak Ave, Dover, {state} 19901.", None),
+        ],
+    )
+    assert r.state_code == want
+
+
+def test_state_code_null_without_address(spark):
+    r = _stage_one(spark, [("Hi, I'm calling about Acme Health.", None)])
+    assert r.state_code is None
 
 
 def test_blocking_key_null_fills(spark):

@@ -981,6 +981,140 @@ class TestSamplingAndNgrams:
         assert got[1].gram < got[2].gram
 
 
+# The O(words^2) n-gram expressions the operators used before they sliced a
+# projected token column: kept here only as the value reference.
+def _old_slice_ngrams(toks, n, short, start):
+    """``toks`` is the tokenizer EXPRESSION; ``start`` 0 or 1 as each old
+    site had it."""
+    if start == 0:
+        seq, at = F.sequence(F.lit(0), F.size(toks) - n), lambda i: i + 1
+    else:
+        seq, at = F.sequence(F.lit(1), F.size(toks) - (n - 1)), lambda i: i
+    return F.when(
+        F.size(toks) >= n,
+        F.transform(seq, lambda i: F.concat_ws(" ", F.slice(toks, at(i), n))),
+    ).otherwise(short)
+
+
+def _old_fingerprint(text, shingle_words=4):
+    from payor_mdm_spark.functions.textnorm import md5_60bit
+    from payor_mdm_spark.operators.text_analysis import tokens_col
+
+    toks = tokens_col(F.regexp_replace(text, r"[^\w\s]", ""))
+    shingles = _old_slice_ngrams(
+        toks, shingle_words, F.array(F.concat_ws(" ", toks)), 0
+    )
+    return F.array_min(F.transform(shingles, lambda s: md5_60bit(s)))
+
+
+def _old_dedup_ngrams(text, n):
+    toks = F.split(F.lower(text), r"\s+")
+    return _old_slice_ngrams(toks, n, F.array(F.concat_ws(" ", toks)), 0)
+
+
+def _old_top_ngrams(text, n):
+    from payor_mdm_spark.operators.text_analysis import tokens_col
+
+    return _old_slice_ngrams(tokens_col(text), n, F.array(), 1)
+
+
+class TestNgramsFromProjectedTokens:
+    """The n-gram and shingle columns built from a projected token column
+    equal the old per-position re-tokenizing expressions, edge cases
+    included."""
+
+    TEXTS = [
+        None,
+        "",
+        "   ",
+        "  leading and trailing spaces  ",
+        "!!! ... ??? --",
+        "two words",
+        "exactly three tokens",
+        "four tokens, exactly here.",
+        "a b c a b c a b c a b c",
+        "spam spam spam spam spam spam",
+        "Ünïcödé façade STRASSE straße 東京 タワー ñandú",
+        "tabs\tand\nnewlines\r\nmixed   in",
+        "The quick brown fox jumps over the lazy dog; the QUICK brown fox!",
+    ]
+
+    @pytest.fixture(scope="class")
+    def edge_docs(self, spark):
+        return spark.createDataFrame(
+            list(enumerate(self.TEXTS)), "doc_id long, text string"
+        )
+
+    def test_fingerprint(self, edge_docs):
+        from payor_mdm_spark.operators.text_analysis import analyze_documents
+
+        got = dict(analyze_documents(edge_docs).select("doc_id", "fingerprint")
+                   .collect())
+        want = dict(edge_docs.select("doc_id", _old_fingerprint(F.col("text")))
+                    .collect())
+        assert got == want
+
+    @pytest.mark.parametrize("n", [1, 2, 3, 4, 5])
+    def test_ngram_columns(self, edge_docs, n):
+        from payor_mdm_spark.operators.dedup import _split_tokens, _word_ngrams
+        from payor_mdm_spark.operators.text_analysis import (
+            tokens_col, word_ngrams_col,
+        )
+
+        t = F.col("text")
+        toks = edge_docs.select(
+            "doc_id", "text",
+            _split_tokens(t).alias("_split"), tokens_col(t).alias("_tok"),
+        )
+        got = toks.select(
+            "doc_id",
+            _word_ngrams(F.col("_split"), n).alias("dedup"),
+            word_ngrams_col(F.col("_tok"), n, F.array()).alias("top"),
+            _old_dedup_ngrams(t, n).alias("old_dedup"),
+            _old_top_ngrams(t, n).alias("old_top"),
+        ).collect()
+        for r in got:
+            assert r.dedup == r.old_dedup, (r.doc_id, n)
+            assert r.top == r.old_top, (r.doc_id, n)
+
+    def test_repetition_signals(self, edge_docs):
+        from collections import Counter
+
+        from payor_mdm_spark.operators.text_analysis import repetition_signals
+
+        old = dict(
+            edge_docs.select("doc_id", _old_dedup_ngrams(F.col("text"), 3))
+            .collect()
+        )
+        got = {r.doc_id: r for r in repetition_signals(edge_docs).collect()}
+        assert set(got) == set(old)
+        for doc_id, grams in old.items():
+            counts = Counter(grams)
+            r = got[doc_id]
+            assert (r.total_ngrams, r.distinct_ngrams) == (len(grams), len(counts))
+            assert r.dup_ngram_ratio == pytest.approx(
+                1 - len(counts) / len(grams), abs=5e-5
+            )
+            assert r.top_ngram_share == pytest.approx(
+                max(counts.values()) / len(grams), abs=5e-5
+            )
+
+    def test_top_ngrams(self, edge_docs):
+        from collections import Counter
+
+        from payor_mdm_spark.operators.text_analysis import top_ngrams
+
+        old = edge_docs.select("doc_id", _old_top_ngrams(F.col("text"), 2)).collect()
+        occ = Counter(g for r in old for g in r[1])
+        dfreq = Counter(g for r in old for g in set(r[1]))
+        want = sorted(occ, key=lambda g: (-occ[g], g))[:40]
+        got = top_ngrams(edge_docs, n=2, k=40).collect()
+        assert [r.gram for r in got] == want
+        assert [(r.occurrences, r.doc_freq) for r in got] == [
+            (occ[g], dfreq[g]) for g in want
+        ]
+
+
 class TestMinhashExactVerifyKernel:
     """Pins the r06 Arrow-kernel exact verify against the expression form's
     edge semantics: NULL text shingles to {NULL} (so a NULL-NULL pair is an
