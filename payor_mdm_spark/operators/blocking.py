@@ -3,17 +3,19 @@
 Re-expresses the reference's OR-of-blocking-keys self-join
 (/root/reference/transform/payor_mdm/models/match/int_blocking_pairs.sql:13-31)
 Spark-first. A literal translation of the OR-join would force a
-BroadcastNestedLoopJoin; instead each blocking key runs as its OWN equi
-self-join and the passes union + dedup (semantically identical — the
-reference's `select distinct` already collapses multi-key hits; SURVEY §2.3
-J1). Two additional passes extend recall per the north_star: a
-sorted-neighborhood window pass and a deterministic MinHash-LSH pass over
-name shingles — both pure native column ops (no Python).
+BroadcastNestedLoopJoin; instead every blocking key becomes one slice of a
+single members frame [_pass, _k, source_record_id] and ONE equi self-join
+keyed on (_pass, _k) proposes the pairs of every key pass at once
+(semantically identical — the reference's `select distinct` already
+collapses multi-key hits; SURVEY §2.3 J1). Two additional passes extend
+recall per the north_star: a deterministic MinHash-LSH pass over name
+shingles, whose (band, bucket) blocks join the same members frame, and a
+sorted-neighborhood window pass — both pure native column ops (no Python).
 
 Skew (north_rule: explicit salting of hot blocking keys): the reference's
 null fill-ins ('XX' state, 'XXX' zip3) and dominant name prefixes create
-mega-blocks that would quadratically blow up the self-join. Every pass
-counts per-key block sizes first; keys whose block exceeds
+mega-blocks that would quadratically blow up the self-join. One
+aggregation counts every (pass, key) block; keys whose block exceeds
 ``max_block_size`` are salted — members are hashed into ceil(n/cap)
 sub-blocks and pairs are generated only within a sub-block. This bounds any
 single join task at ~cap^2 pair candidates (documented recall trade on
@@ -67,12 +69,12 @@ def _hot_blocks(
 
 
 def _pairs_within_blocks(
-    members: DataFrame, key_cols: list[str], pass_name: str, max_block_size: int
+    members: DataFrame, key_cols: list[str], max_block_size: int
 ) -> DataFrame:
     """Equi self-join within blocks, with hot blocks salted.
 
     ``members``: DataFrame[key_cols..., source_record_id]. Returns
-    DataFrame[source_record_id_a, source_record_id_b, block_pass].
+    DataFrame[key_cols..., source_record_id_a, source_record_id_b].
     """
     hot = _hot_blocks(members, key_cols, max_block_size)
     salted = _with_block_salt(members, hot, key_cols, max_block_size)
@@ -85,19 +87,8 @@ def _pairs_within_blocks(
         # canonical ordering halves the pair space and kills self-pairs
         # (int_blocking_pairs.sql:19)
         .filter(F.col(f"{_ID}_a") < F.col(f"{_ID}_b"))
-        .select(f"{_ID}_a", f"{_ID}_b")
-        .withColumn("block_pass", F.lit(pass_name))
+        .select(*key_cols, f"{_ID}_a", f"{_ID}_b")
     )
-
-
-def _key_pass(
-    staged: DataFrame, key_col: str, pass_name: str, max_block_size: int
-) -> DataFrame:
-    members = (
-        staged.filter(F.col(key_col).isNotNull() & (F.col(key_col) != ""))
-        .select(F.col(key_col).alias("_k"), _ID)
-    )
-    return _pairs_within_blocks(members, ["_k"], pass_name, max_block_size)
 
 
 def sorted_neighborhood_pass(
@@ -133,7 +124,6 @@ def sorted_neighborhood_pass(
             F.greatest(F.col(_ID), F.col("_other")).alias(f"{_ID}_b"),
         )
         .filter(F.col(f"{_ID}_a") < F.col(f"{_ID}_b"))
-        .withColumn("block_pass", F.lit("sorted_neighborhood"))
     )
 
 
@@ -354,45 +344,39 @@ def _with_signature(
     )
 
 
-def minhash_lsh_pass(
-    staged: DataFrame,
-    num_hashes: int = MINHASH_NUM_HASHES,
-    bands: int = MINHASH_BANDS,
-    max_block_size: int = MAX_BLOCK_SIZE,
-) -> DataFrame:
-    """LSH banding: records sharing any band signature become candidates.
+def _minhash_members(staged: DataFrame) -> DataFrame:
+    """MinHash-LSH band members: [_k, source_record_id], one row per
+    (record, band); records sharing any band signature become candidates.
 
     Signature/banding is pure column math (xxhash64 seeds), so the pass is
     deterministic across runs and cluster sizes — required for golden
-    fixtures. Each band bucket is a block, subject to the same hot-block
-    salting as key passes.
+    fixtures. Each (band, bucket) is a block, encoded injectively as the
+    string "band:bucket" so it shares the key passes' block column and
+    their hot-block salting.
     """
-    rows_per_band = num_hashes // bands
+    rows_per_band = MINHASH_NUM_HASHES // MINHASH_BANDS
     base = staged.filter(
         F.col("name_norm").isNotNull() & (F.length("name_norm") > 0)
     ).select(F.col(_ID), F.col("name_norm"))
     # eager materialization: the banded members feed the block-count
     # aggregation AND both sides of the pair self-join — otherwise the
     # (CPU-heavy) signature lineage re-executes up to 4x
-    sig = _with_signature(base, "name_norm", num_hashes, MINHASH_SHINGLE_K).select(
-        F.col(_ID), F.col("_sig")
-    ).localCheckpoint(eager=True)
-    band_structs = F.array(
+    sig = _with_signature(
+        base, "name_norm", MINHASH_NUM_HASHES, MINHASH_SHINGLE_K
+    ).select(F.col(_ID), F.col("_sig")).localCheckpoint(eager=True)
+    band_keys = F.array(
         *[
-            F.struct(
-                F.lit(b).alias("band"),
+            F.concat_ws(
+                ":",
+                F.lit(b),
                 F.xxhash64(
                     *[F.element_at("_sig", b * rows_per_band + r + 1) for r in range(rows_per_band)]
-                ).alias("bucket"),
+                ),
             )
-            for b in range(bands)
+            for b in range(MINHASH_BANDS)
         ]
     )
-    members = (
-        sig.select(F.col(_ID), F.explode(band_structs).alias("_b"))
-        .select(F.col("_b.band").alias("_band"), F.col("_b.bucket").alias("_bucket"), _ID)
-    )
-    return _pairs_within_blocks(members, ["_band", "_bucket"], "minhash_lsh", max_block_size)
+    return sig.select(F.explode(band_keys).alias("_k"), _ID)
 
 
 def candidate_pairs(
@@ -400,61 +384,74 @@ def candidate_pairs(
     max_block_size: int = MAX_BLOCK_SIZE,
     include_sorted_neighborhood: bool = True,
     include_minhash: bool = True,
-    sn_window: int = SORTED_NEIGHBORHOOD_WINDOW,
 ) -> DataFrame:
     """All blocking passes, unioned + deduped.
+
+    Every key pass and the MinHash-LSH bands are slices of ONE members
+    frame [_pass, _k, source_record_id], so one block count, one broadcast
+    of the hot blocks and one salted self-join on (_pass, _k) propose them
+    all; the sorted-neighborhood window pairs are unioned in after.
 
     Output: source_record_id_a < source_record_id_b, matched_block_keys
     (sorted array of pass names that proposed the pair — superset metadata
     vs the reference's plain DISTINCT).
     """
+    # the pass list: (name, staged key column or None); a pass's index is
+    # its bit in the matched-keys mask
     passes = [
-        _key_pass(staged, "block_exact_key", "exact_key", max_block_size),
-        _key_pass(staged, "block_name_key", "name_state", max_block_size),
-        _key_pass(staged, "block_zip3_name4", "zip3_name4", max_block_size),
+        ("exact_key", "block_exact_key"),
+        ("name_state", "block_name_key"),
+        ("zip3_name4", "block_zip3_name4"),
     ]
     if "block_abbr_key" in staged.columns:
-        passes.append(_key_pass(staged, "block_abbr_key", "abbr_name_state", max_block_size))
+        passes.append(("abbr_name_state", "block_abbr_key"))
     if include_sorted_neighborhood:
-        passes.append(sorted_neighborhood_pass(staged, sn_window))
+        passes.append(("sorted_neighborhood", None))
     if include_minhash:
-        passes.append(minhash_lsh_pass(staged, max_block_size=max_block_size))
-    # The pass set is tiny and known, so the union/aggregation carries a
-    # per-pass BIT instead of the pass-name string, bit_or's the mask
-    # (map-side partial agg on an int, guide §2.3 "shuffle keys and
-    # metadata"), and maps the mask to its precomputed sorted-name array
-    # through a 2^n-entry literal table — value-identical to
-    # sort_array(collect_set(block_pass)) with a far narrower shuffle and
-    # no per-group string-set buffer.
-    pass_names = ["exact_key", "name_state", "zip3_name4"]
-    if "block_abbr_key" in staged.columns:
-        pass_names.append("abbr_name_state")
+        passes.append(("minhash_lsh", None))
+    names = [name for name, _ in passes]
+
+    members = None
+    for bit, (name, key_col) in enumerate(passes):
+        if key_col is not None:
+            blocks = staged.filter(
+                F.col(key_col).isNotNull() & (F.col(key_col) != "")
+            ).select(F.col(key_col).alias("_k"), _ID)
+        elif name == "minhash_lsh":
+            blocks = _minhash_members(staged)
+        else:
+            continue
+        part = blocks.select(F.lit(bit).alias("_pass"), "_k", _ID)
+        members = part if members is None else members.unionByName(part)
+    a_b = [f"{_ID}_a", f"{_ID}_b"]
+    unioned = _pairs_within_blocks(members, ["_pass", "_k"], max_block_size).select(
+        *a_b, F.expr("shiftleft(1, _pass)").alias("_pm")
+    )
     if include_sorted_neighborhood:
-        pass_names.append("sorted_neighborhood")
-    if include_minhash:
-        pass_names.append("minhash_lsh")
-    bit_of = {n: i for i, n in enumerate(pass_names)}
-    unioned = None
-    for p, name in zip(passes, pass_names):
-        masked = p.select(
-            f"{_ID}_a", f"{_ID}_b", F.lit(1 << bit_of[name]).alias("_pm")
+        unioned = unioned.unionByName(
+            sorted_neighborhood_pass(staged).select(
+                *a_b, F.lit(1 << names.index("sorted_neighborhood")).alias("_pm")
+            )
         )
-        unioned = masked if unioned is None else unioned.unionByName(masked)
+    # The pass set is tiny and known, so the aggregation carries a per-pass
+    # BIT instead of the pass-name string, bit_or's the mask (map-side
+    # partial agg on an int, guide §2.3 "shuffle keys and metadata"), and
+    # maps the mask to its precomputed sorted-name array through a
+    # 2^n-entry literal table — value-identical to a sorted set of pass
+    # names with a far narrower shuffle and no per-group string-set buffer.
     mask_table = F.array(
         *[
-            F.array(
-                *[F.lit(n) for n in sorted(
-                    n for n in pass_names if m & (1 << bit_of[n])
-                )]
-            )
-            for m in range(1 << len(pass_names))
+            F.array(*[F.lit(n) for n in sorted(
+                n for bit, n in enumerate(names) if m & (1 << bit)
+            )])
+            for m in range(1 << len(names))
         ]
     )
     return (
-        unioned.groupBy(f"{_ID}_a", f"{_ID}_b")
+        unioned.groupBy(*a_b)
         .agg(F.bit_or("_pm").alias("_mask"))
         .select(
-            f"{_ID}_a", f"{_ID}_b",
+            *a_b,
             F.element_at(mask_table, F.col("_mask") + 1).alias("matched_block_keys"),
         )
     )

@@ -23,10 +23,9 @@ population is unioned back afterwards — the iteration working set is
 proportional to the matched sub-population, not the corpus.
 
 Group semantics mirror the proc:
-  * match_group_id — deterministic, content-derived. Default 'anchor' mode:
-    md5(min member id) (= the SQL variant, match_groups.sql:95, O(1) per
-    group at any group size). 'members' mode: md5 over the sorted member
-    list (the proc's UUID5-over-sorted-members analog, :65-66).
+  * match_group_id — deterministic, content-derived: md5(min member id)
+    (= the SQL variant, match_groups.sql:95, O(1) per group at any group
+    size).
   * is_survivor — lowest source_trust_rank, ties to smallest id (:77).
   * group_confidence — avg incident match score, round 4 (:69-74);
     NULL for singletons.
@@ -131,11 +130,7 @@ def propagate_labels(
     )
 
 
-def build_match_groups(
-    candidates: DataFrame,
-    staged: DataFrame,
-    group_id_mode: str = "anchor",
-) -> DataFrame:
+def build_match_groups(candidates: DataFrame, staged: DataFrame) -> DataFrame:
     """Confirmed candidates + staged records -> match_groups table:
     [match_group_id, source_record_id, is_survivor, group_confidence,
     component]."""
@@ -154,17 +149,9 @@ def build_match_groups(
         .agg(F.round(F.avg("overall_score"), 4).alias("group_confidence"))
     )
 
-    members = labeled.join(conf, "component", "left")
-
-    if group_id_mode == "members":
-        gid = members.groupBy("component").agg(
-            F.md5(F.concat_ws("|", F.sort_array(F.collect_list(_ID)))).alias(
-                "match_group_id"
-            )
-        )
-        members = members.join(gid, "component")
-    else:
-        members = members.withColumn("match_group_id", F.md5(F.col("component")))
+    members = labeled.join(conf, "component", "left").withColumn(
+        "match_group_id", F.md5(F.col("component"))
+    )
 
     # survivor: lowest trust rank, ties -> smallest id (proc :77)
     trust = staged.select(_ID, "source_trust_rank")

@@ -139,7 +139,7 @@ def minhash_dedup_pairs(
     # the threshold), so deduping the tiny SURVIVOR set instead removes a
     # full pair-table shuffle at ~2% extra estimator work (guide §2.4)
     cands = _pairs_within_blocks(
-        members, ["_band", "_bucket"], "minhash", max_block_size
+        members, ["_band", "_bucket"], max_block_size
     ).select(
         F.col("source_record_id_a").alias("id_a"),
         F.col("source_record_id_b").alias("id_b"),
@@ -259,7 +259,7 @@ def _minhash_exact_verify(
     with interpreted `array_intersect`/`array_union` per pair. Now the
     pair table attaches the raw TEXTS (the lightest possible proxy) and a
     single Arrow kernel computes |A∩B|/|A∪B| over C-native frozensets,
-    memoizing each distinct text's shingle set per task. Semantics are
+    memoizing each distinct text's shingle set per Arrow batch. Semantics are
     bit-identical to the expression form, including the edges: NULL text
     -> {NULL} (two NULL docs share jaccard 1.0), short text (< k chars)
     -> the whole string as its only shingle; the division is the same
@@ -317,9 +317,7 @@ def _minhash_exact_verify(
     def gen(batches):
         import pandas as pd
 
-        memo: dict = {}
-
-        def sset(u):
+        def sset(u, memo):
             s = memo.get(u)
             if s is None:
                 if u is None:
@@ -336,13 +334,16 @@ def _minhash_exact_verify(
             return s
 
         for pdf in batches:
+            # per-batch memo, like the ensemble kernel's: it dies with the
+            # Arrow batch, so a task holds at most one batch's shingle sets
+            memo: dict = {}
             ia = pdf["id_a"].tolist()
             ib = pdf["id_b"].tolist()
             ta = pdf["_ta"].tolist()
             tb = pdf["_tb"].tolist()
             oa, ob, oj = [], [], []
             for i in range(len(ia)):
-                sa, sb = sset(ta[i]), sset(tb[i])
+                sa, sb = sset(ta[i], memo), sset(tb[i], memo)
                 un = len(sa | sb)
                 j = len(sa & sb) / un if un > 0 else 0.0
                 if j >= thr:
@@ -487,7 +488,7 @@ def simhash_candidate_pairs(
         "source_record_id",
     )
     return (
-        _pairs_within_blocks(members, ["_band", "_bucket"], "simhash", max_block_size)
+        _pairs_within_blocks(members, ["_band", "_bucket"], max_block_size)
         .select(
             F.col("source_record_id_a").alias("id_a"),
             F.col("source_record_id_b").alias("id_b"),
@@ -664,7 +665,6 @@ def minhash_dedup_incremental(
     jaccard_threshold: float = 0.8,
     max_block_size: int = 500,
     hash_mode: str = "xxhash64",
-    update_store: bool = True,
 ) -> DataFrame:
     """Incremental near-dup detection: pairs INVOLVING the new batch only.
 
@@ -686,7 +686,7 @@ def minhash_dedup_incremental(
     may bound work differently on that block — the same documented recall
     trade the batch operator makes.
 
-    ``update_store``: commit the merged signature table back to ``store``
+    With a ``store``, the merged signature table is committed back to it,
     so the next delta skips old-corpus signature computation entirely.
     """
     rows_per_band = num_hashes // bands
@@ -738,6 +738,6 @@ def minhash_dedup_incremental(
         survivors, all_docs, id_col, text_col, shingle_k, jaccard_threshold,
         n_pairs=survivors.count(),
     )
-    if store is not None and update_store:
+    if store is not None:
         store.write(table, all_base.withColumn("_params", F.lit(params)))
     return pairs

@@ -310,7 +310,7 @@ def embedding_near_dup_pairs(
         "source_record_id",
     )
     cands = (
-        _pairs_within_blocks(members, ["_band", "_bucket"], "emb_lsh", max_block_size)
+        _pairs_within_blocks(members, ["_band", "_bucket"], max_block_size)
         .select(
             F.col("source_record_id_a").alias("id_a"),
             F.col("source_record_id_b").alias("id_b"),

@@ -15,6 +15,8 @@ current_timestamp(), match_candidates.sql:47).
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -56,27 +58,31 @@ def run_pipeline(
     killed run restarts from the last completed stage."""
     runner = StageRunner(spark, store, run_ts, resume, collect_metrics,
                          "run_metrics", "partition_metrics")
-    _run_stages(runner, turns, steward_decisions, hierarchy_overrides,
-                survivorship_rules, max_block_size)
+    _run_stages(
+        runner, lambda: stage_records(spark, rollup_conversations(turns)),
+        score_pairs, steward_decisions, hierarchy_overrides,
+        survivorship_rules, max_block_size,
+    )
     return runner.finish()
 
 
 def _run_stages(
     runner: StageRunner,
-    turns: DataFrame,
+    build_staged: Callable[[], DataFrame],
+    build_scored: Callable[..., DataFrame],
     steward_decisions: DataFrame | None,
     hierarchy_overrides: DataFrame | None,
     survivorship_rules: dict[str, str] | None,
     max_block_size: int | None,
 ) -> None:
-    """The ER DAG's stages, in commit order."""
+    """The ER DAG's stages, in commit order. ``build_staged()`` builds the
+    staged table; ``build_scored(pairs, staged, abbrevs=...)`` builds the
+    scored pairs from the committed blocking pairs and staged records."""
     from payor_mdm_spark.config import MAX_BLOCK_SIZE
 
-    spark, store, run_ts = runner.spark, runner.store, runner.run_ts
+    store, run_ts = runner.store, runner.run_ts
     max_block = max_block_size or MAX_BLOCK_SIZE
-    staged = runner.run(
-        "staged", lambda: stage_records(spark, rollup_conversations(turns))
-    )
+    staged = runner.run("staged", build_staged)
     # staged is scanned by every blocking pass and both sides of the scoring
     # rehydration join — cache the committed snapshot WITHOUT the
     # packed-turns payload: no downstream stage reads `turns` (it lives in
@@ -98,7 +104,7 @@ def _run_stages(
 
     abbrevs = load_abbreviation_dict(store)
     scored = runner.run(
-        "scored_pairs", lambda: score_pairs(pairs, staged, abbrevs=abbrevs)
+        "scored_pairs", lambda: build_scored(pairs, staged, abbrevs=abbrevs)
     )
     candidates = runner.run(
         "match_candidates",
@@ -182,32 +188,27 @@ def run_incremental(
       scores verbatim (scores are deterministic functions of the two
       records), with matched_block_keys refreshed from the new pair table;
     * the cheap downstream aggregates (candidates, CC, survivorship,
-      golden, xref, hierarchy) rebuild via the normal resume path.
+      golden, xref, hierarchy) rebuild through the same stage runner as a
+      full run; staged and scored_pairs come from delta-aware builders.
 
     Output tables are bit-identical to a full rebuild on the upserted
     corpus — pinned by tests/test_incremental.py.
     """
-    from payor_mdm_spark.config import MAX_BLOCK_SIZE
-
     for required in ("staged", "scored_pairs"):
         if not store.exists(required):
             raise ValueError(
                 f"incremental run needs a committed '{required}' stage; "
                 "run run_pipeline() first"
             )
-    max_block = max_block_size or MAX_BLOCK_SIZE
 
     old_staged = store.read("staged")
     # staged carries the conversation id as source_id (operators/staging.py)
     changed_convs = delta_turns.select(F.col("conv_id").alias("source_id")).distinct()
     staged_delta = stage_records(spark, rollup_conversations(delta_turns))
-    staged = old_staged.join(changed_convs, "source_id", "left_anti").unionByName(
-        staged_delta.select(*old_staged.columns)
-    )
     # records whose content changed (old version of changed convs + new
     # versions): any pair touching one of these must be re-scored.
-    # MATERIALIZE before the staged overwrite below — the lineage reads the
-    # OLD staged files, which the atomic swap deletes.
+    # MATERIALIZE before the staged commit — the lineage reads the OLD
+    # staged files, which the atomic swap deletes.
     changed_ids = (
         old_staged.join(changed_convs, "source_id", "semi")
         .select("source_record_id")
@@ -215,60 +216,60 @@ def run_incremental(
         .distinct()
     ).localCheckpoint(eager=True)
 
-    store.write("staged", staged)
-    # same pruned cache as run_pipeline: scoring/blocking never read turns
-    staged = store.read("staged").drop("turns").cache()
-
-    pairs = candidate_pairs(staged, max_block_size=max_block)
-    store.write("blocking_pairs", pairs)
-    pairs = store.read("blocking_pairs")
-
-    keys = ["source_record_id_a", "source_record_id_b"]
-    old_scored = store.read("scored_pairs")
-    reusable = (
-        old_scored.drop("matched_block_keys")
-        .join(pairs, keys)  # inner: drops no-longer-proposed pairs, refreshes keys
-        .join(
-            changed_ids.withColumnRenamed("source_record_id", keys[0]),
-            keys[0], "left_anti",
+    def build_staged() -> DataFrame:
+        return old_staged.join(changed_convs, "source_id", "left_anti").unionByName(
+            staged_delta.select(*old_staged.columns)
         )
-        .join(
-            changed_ids.withColumnRenamed("source_record_id", keys[1]),
-            keys[1], "left_anti",
+
+    rescored_n = 0
+
+    def build_scored(pairs: DataFrame, staged: DataFrame,
+                     abbrevs: dict[str, str] | None) -> DataFrame:
+        nonlocal rescored_n
+        keys = ["source_record_id_a", "source_record_id_b"]
+        reusable = (
+            store.read("scored_pairs").drop("matched_block_keys")
+            .join(pairs, keys)  # inner: drops no-longer-proposed pairs, refreshes keys
+            .join(
+                changed_ids.withColumnRenamed("source_record_id", keys[0]),
+                keys[0], "left_anti",
+            )
+            .join(
+                changed_ids.withColumnRenamed("source_record_id", keys[1]),
+                keys[1], "left_anti",
+            )
         )
-    )
-    to_score = pairs.join(reusable.select(*keys), keys, "left_anti")
-    if collect_metrics:
-        # incremental lineage: how much Python-kernel work the delta cost —
-        # counted BEFORE the scored swap (to_score's lineage reads the old
-        # committed scored table) and without touching the kernel (the
-        # count needs only pair keys)
-        rescored_n = to_score.count()
-    from payor_mdm_spark.sources.steward import load_abbreviation_dict
+        to_score = pairs.join(reusable.select(*keys), keys, "left_anti")
+        if collect_metrics:
+            # incremental lineage: how much Python-kernel work the delta
+            # cost — counted BEFORE the scored commit (to_score's lineage
+            # reads the old committed scored table) and without touching
+            # the kernel (the count needs only pair keys)
+            rescored_n = to_score.count()
+        fresh = score_pairs(to_score, staged, abbrevs=abbrevs)
+        # Recompute geo_contradiction for ALL reused pairs (not just
+        # pre-upgrade stores missing the column): the recompute is exact for
+        # reused pairs — their staged attributes are unchanged by definition
+        # — and it makes a semantic upgrade of the contradiction rule (r4
+        # added zip5) reach pairs committed under the old rule, preserving
+        # the incremental == full-rebuild contract across engine upgrades.
+        # Cost: one extra equi-join against a 4-column projection of staged.
+        # (Applied after to_score so the anti-join plan stays two-table.)
+        reusable = add_geo_contradiction(reusable, staged)
+        return reusable.select(*fresh.columns).unionByName(fresh)
 
-    fresh = score_pairs(to_score, staged, abbrevs=load_abbreviation_dict(store))
-    # Recompute geo_contradiction for ALL reused pairs (not just pre-upgrade
-    # stores missing the column): the recompute is exact for reused pairs —
-    # their staged attributes are unchanged by definition — and it makes a
-    # semantic upgrade of the contradiction rule (r4 added zip5) reach pairs
-    # committed under the old rule, preserving the incremental == full-rebuild
-    # contract across engine upgrades. Cost: one extra equi-join against a
-    # 4-column projection of staged. (Applied after to_score so the
-    # anti-join plan stays two-table.)
-    reusable = add_geo_contradiction(reusable, staged)
-    scored = reusable.select(*fresh.columns).unionByName(fresh)
-    store.write("scored_pairs", scored)
-
-    # downstream aggregates rebuild through the normal resume machinery
+    # every stage is rebuilt, from the delta-aware builders above down;
+    # drop the downstream tables first so a run killed midway cannot leave
+    # a stale mix behind for a later resume
     for stg in (
         "match_candidates", "match_groups", "survived", "golden", "xref",
         "hierarchy",
     ):
         store.drop(stg)
-    runner = StageRunner(spark, store, run_ts, True, collect_metrics,
+    runner = StageRunner(spark, store, run_ts, False, collect_metrics,
                          "run_metrics", "partition_metrics")
-    _run_stages(runner, delta_turns, steward_decisions, hierarchy_overrides,
-                survivorship_rules, max_block)
+    _run_stages(runner, build_staged, build_scored, steward_decisions,
+                hierarchy_overrides, survivorship_rules, max_block_size)
     if collect_metrics:
         total_n = next(m["rows"] for m in runner.result.metrics
                        if m["stage"] == "scored_pairs")

@@ -4,7 +4,6 @@ from pyspark.sql import functions as F
 
 from payor_mdm_spark.operators.blocking import (
     candidate_pairs,
-    minhash_lsh_pass,
     minhash_signature,
     sorted_neighborhood_pass,
 )
@@ -58,15 +57,17 @@ def test_minhash_signature_deterministic(spark):
 def test_minhash_pass_finds_near_identical_names(spark):
     staged = spark.createDataFrame(
         [
-            ("r1", "BLUE CROSS BLUE SHIELD OF TEXAS"),
-            ("r2", "BLUE CROSS BLUE SHIELD OF TEXAS INC"),
-            ("r3", "COMPLETELY DIFFERENT ENTITY NAME"),
+            ("r1", "BLUE CROSS BLUE SHIELD OF TEXAS", None, None, None),
+            ("r2", "BLUE CROSS BLUE SHIELD OF TEXAS INC", None, None, None),
+            ("r3", "COMPLETELY DIFFERENT ENTITY NAME", None, None, None),
         ],
-        "source_record_id string, name_norm string",
+        "source_record_id string, name_norm string, block_exact_key string, "
+        "block_name_key string, block_zip3_name4 string",
     )
+    # NULL block keys: only the MinHash-LSH pass can propose a pair
     got = {
         (r.source_record_id_a, r.source_record_id_b)
-        for r in minhash_lsh_pass(staged).collect()
+        for r in candidate_pairs(staged, include_sorted_neighborhood=False).collect()
     }
     assert ("r1", "r2") in got
     assert ("r1", "r3") not in got
@@ -105,7 +106,7 @@ def test_degenerate_block_kill_test(spark):
         [(rid, k) for rid, k in hot + cold], "source_record_id string, _k string"
     ).repartition(32)
 
-    salted = _pairs_within_blocks(members, ["_k"], "kill", cap)
+    salted = _pairs_within_blocks(members, ["_k"], cap)
     hot_pairs = salted.filter(
         F.col("source_record_id_a").startswith("h")
     ).count()
@@ -144,3 +145,116 @@ def test_degenerate_block_kill_test(spark):
     )
     n_hot_groups = sum(1 for r in groups if r["_k"] == "HOTKEY")
     assert n_hot_groups == 10  # ceil(2000 / 200) sub-blocks
+
+
+# ---------------------------------------------------------------------------
+# One salted block join for every pass: candidate_pairs runs all key passes
+# and the MinHash-LSH bands through ONE self-join keyed on (pass, key). The
+# reference below is the per-pass shape it replaced, kept only here: each
+# pass runs its own hot-block count and salted self-join, the pass names are
+# unioned and collected per pair.
+# ---------------------------------------------------------------------------
+
+def _per_pass_reference(staged, max_block_size):
+    from payor_mdm_spark.config import (
+        MINHASH_BANDS,
+        MINHASH_NUM_HASHES,
+        MINHASH_SHINGLE_K,
+    )
+    from payor_mdm_spark.operators.blocking import (
+        _pairs_within_blocks,
+        _with_signature,
+    )
+
+    ids = ["source_record_id_a", "source_record_id_b"]
+    key_passes = [
+        ("exact_key", "block_exact_key"),
+        ("name_state", "block_name_key"),
+        ("zip3_name4", "block_zip3_name4"),
+        ("abbr_name_state", "block_abbr_key"),
+    ]
+    passes = []
+    for name, col in key_passes:
+        if col not in staged.columns:
+            continue
+        members = staged.filter(
+            F.col(col).isNotNull() & (F.col(col) != "")
+        ).select(F.col(col).alias("_k"), "source_record_id")
+        passes.append(
+            _pairs_within_blocks(members, ["_k"], max_block_size)
+            .select(*ids).withColumn("_pass", F.lit(name))
+        )
+
+    rows_per_band = MINHASH_NUM_HASHES // MINHASH_BANDS
+    sig = _with_signature(
+        staged.filter(F.col("name_norm").isNotNull() & (F.length("name_norm") > 0))
+        .select("source_record_id", "name_norm"),
+        "name_norm", MINHASH_NUM_HASHES, MINHASH_SHINGLE_K,
+    )
+    bands = F.array(*[
+        F.struct(
+            F.lit(b).alias("band"),
+            F.xxhash64(*[
+                F.element_at("_sig", b * rows_per_band + r + 1)
+                for r in range(rows_per_band)
+            ]).alias("bucket"),
+        )
+        for b in range(MINHASH_BANDS)
+    ])
+    lsh_members = sig.select("source_record_id", F.explode(bands).alias("_b")).select(
+        F.col("_b.band").alias("_band"), F.col("_b.bucket").alias("_bucket"),
+        "source_record_id",
+    )
+    passes.append(
+        _pairs_within_blocks(lsh_members, ["_band", "_bucket"], max_block_size)
+        .select(*ids).withColumn("_pass", F.lit("minhash_lsh"))
+    )
+    passes.append(
+        sorted_neighborhood_pass(staged).select(*ids)
+        .withColumn("_pass", F.lit("sorted_neighborhood"))
+    )
+    unioned = passes[0]
+    for p in passes[1:]:
+        unioned = unioned.unionByName(p)
+    return unioned.groupBy(*ids).agg(
+        F.sort_array(F.collect_set("_pass")).alias("matched_block_keys")
+    )
+
+
+def _rows(df):
+    return sorted(
+        (r.source_record_id_a, r.source_record_id_b, tuple(r.matched_block_keys))
+        for r in df.collect()
+    )
+
+
+def test_one_block_join_equals_per_pass_reference(spark, pipeline_run):
+    from payor_mdm_spark.config import MAX_BLOCK_SIZE
+
+    staged = pipeline_run["res"].tables["staged"]
+    got = _rows(candidate_pairs(staged))
+    assert got == _rows(_per_pass_reference(staged, MAX_BLOCK_SIZE))
+    assert got  # the world proposes pairs
+
+
+def test_one_block_join_equals_reference_with_hot_blocks(spark):
+    # 40 records: block_exact_key is one 40-member block and block_name_key
+    # a 25-member block, both hot at cap 10, so both passes are salted in
+    # the shared join; zip3 blocks (5 members) and the abbr key stay cold
+    rows = [
+        (
+            f"r{i:02d}", f"ACME HEALTH PLAN {i:02d}", "999999999",
+            "NK" if i < 25 else f"NK{i}", f"Z{i % 8}", None if i % 3 else f"A{i % 2}",
+        )
+        for i in range(40)
+    ]
+    staged = spark.createDataFrame(
+        rows,
+        "source_record_id string, name_norm string, block_exact_key string, "
+        "block_name_key string, block_zip3_name4 string, block_abbr_key string",
+    )
+    got = _rows(candidate_pairs(staged, max_block_size=10))
+    assert got == _rows(_per_pass_reference(staged, 10))
+    # salting actually bounded the hot passes: far fewer than C(40, 2)
+    exact = [r for r in got if "exact_key" in r[2]]
+    assert 0 < len(exact) < 40 * 39 // 2

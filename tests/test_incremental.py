@@ -186,6 +186,9 @@ def test_incremental_metrics_report_reuse(spark, worlds, tmp_path):
     total = inc.tables["scored_pairs"].count()
     assert rescored + reused == total
     assert reused > 0 and rescored > 0
+    # the stages the delta rebuilt are reported as built, not resumed
+    for stage in ("staged", "blocking_pairs", "scored_pairs"):
+        assert by_stage[stage]["skipped"] is False, stage
     # persisted run_metrics carries the same rows: one write holds every
     # stage plus the two incremental rows
     persisted = {r.stage: r.rows for r in store.read("run_metrics").collect()}

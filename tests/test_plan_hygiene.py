@@ -109,6 +109,22 @@ def test_er_pipeline_stage_plans_clean(er_stage_frames, stage):
     _assert_clean(stage, er_stage_frames[stage])
 
 
+def test_candidate_pairs_job_budget(spark, er_stage_frames):
+    """Every key pass and the MinHash-LSH bands share ONE hot-block count,
+    broadcast and salted self-join, so the blocking stage's job count does
+    not grow with the number of passes (the per-pass shape, one count,
+    broadcast and join per pass, failed this bound)."""
+    from payor_mdm_spark.operators.blocking import candidate_pairs
+
+    staged = er_stage_frames["staged"]
+    staged.count()  # fill the cache outside the counted region
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    candidate_pairs(staged).collect()
+    jobs = set(tracker.getJobIdsForGroup(None)) - before
+    assert len(jobs) <= 12, f"candidate_pairs ran {len(jobs)} jobs"
+
+
 def test_docs_pipeline_stage_plans_clean(spark):
     from pyspark.sql import functions as F
 

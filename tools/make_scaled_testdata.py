@@ -6,9 +6,11 @@ builds a *statistically similar* stand-in by replicating a committed SF
 directory R times with disjoint key ranges, so queries can be measured at
 the driver's scale on data of the right shape:
 
-* keys are contiguous 0-based in every table, so replica r offsets each key
-  by r * max_key+1 — foreign keys (orders.custkey, lineitem.orderkey, ...)
-  stay consistent, and per-key group sizes (blocking buckets, per-customer
+* replica r shifts every key by r * (max(key) + 1), with max(key) read
+  from ``--src`` (one aggregate per key domain), so replicas never
+  collide; every foreign key (orders.custkey, lineitem.orderkey, ...)
+  shifts by the offset of the table it references, so references stay
+  consistent, and per-key group sizes (blocking buckets, per-customer
   order chains, per-user event streams) scale exactly as a native N-x
   generation would;
 * embedded key names (Customer#..., Supplier#...) are re-derived from the
@@ -38,30 +40,44 @@ import zlib
 import duckdb
 import pandas as pd
 
-OFFSETS = {
-    "customer": 15000,
-    "orders": 150000,
-    "supplier": 1000,
-    "part": 20000,
-    "lineitem": 150000,  # orderkey domain
-    "events": 100000,
-    "documents": 5000,
-    "embeddings": 2000,
+# key domain -> the (table, column) whose max + 1 is the per-replica shift
+KEY_DOMAINS = {
+    "custkey": ("customer", "c_custkey"),
+    "orderkey": ("orders", "o_orderkey"),
+    "suppkey": ("supplier", "s_suppkey"),
+    "partkey": ("part", "p_partkey"),
+    "event_id": ("events", "event_id"),
+    "user_id": ("events", "user_id"),
+    "doc_id": ("documents", "doc_id"),
+    "vec_id": ("embeddings", "vec_id"),
 }
 
 
-def scale_sql(table: str, src: str, r: int) -> str:
+def key_offsets(con: duckdb.DuckDBPyConnection, src: str) -> dict[str, int]:
+    """max(key) + 1 per key domain of ``src``: the smallest shift that keeps
+    replicas disjoint, whatever the source key range is."""
+    return {
+        domain: con.sql(
+            f"select coalesce(max({col}), -1) + 1 from '{src}/{table}.parquet'"
+        ).fetchone()[0]
+        for domain, (table, col) in KEY_DOMAINS.items()
+    }
+
+
+def scale_sql(table: str, src: str, r: int, offsets: dict[str, int]) -> str:
     f = f"'{src}/{table}.parquet'"
-    c = OFFSETS.get(table, 0) * r
+    o = {domain: off * r for domain, off in offsets.items()}
     if table in ("region", "nation"):
         return f"select * from {f}" if r == 0 else ""
     if table == "customer":
+        c = o["custkey"]
         return (
             f"select c_custkey + {c} as c_custkey,"
             f" 'Customer#' || lpad(cast(c_custkey + {c} as varchar), 9, '0') as c_name,"
             f" c_nationkey, c_acctbal, c_mktsegment from {f}"
         )
     if table == "supplier":
+        c = o["suppkey"]
         return (
             f"select s_suppkey + {c} as s_suppkey,"
             f" 'Supplier#' || lpad(cast(s_suppkey + {c} as varchar), 9, '0') as s_name,"
@@ -69,30 +85,31 @@ def scale_sql(table: str, src: str, r: int) -> str:
         )
     if table == "part":
         return (
-            f"select p_partkey + {c} as p_partkey, p_name, p_brand, p_type,"
-            f" p_size, p_retailprice from {f}"
+            f"select p_partkey + {o['partkey']} as p_partkey, p_name, p_brand,"
+            f" p_type, p_size, p_retailprice from {f}"
         )
     if table == "orders":
         return (
-            f"select o_orderkey + {c} as o_orderkey,"
-            f" o_custkey + {15000 * r} as o_custkey,"
+            f"select o_orderkey + {o['orderkey']} as o_orderkey,"
+            f" o_custkey + {o['custkey']} as o_custkey,"
             f" o_orderstatus, o_totalprice, o_orderdate, o_orderpriority from {f}"
         )
     if table == "lineitem":
         return (
-            f"select l_orderkey + {c} as l_orderkey,"
-            f" l_partkey + {20000 * r} as l_partkey,"
-            f" l_suppkey + {1000 * r} as l_suppkey,"
+            f"select l_orderkey + {o['orderkey']} as l_orderkey,"
+            f" l_partkey + {o['partkey']} as l_partkey,"
+            f" l_suppkey + {o['suppkey']} as l_suppkey,"
             f" l_linenumber, l_quantity, l_extendedprice, l_discount, l_tax,"
             f" l_returnflag, l_linestatus, l_shipdate from {f}"
         )
     if table == "events":
         return (
-            f"select event_id + {c} as event_id, ts,"
-            f" user_id + {1500 * r} as user_id, event_type, value, props from {f}"
+            f"select event_id + {o['event_id']} as event_id, ts,"
+            f" user_id + {o['user_id']} as user_id, event_type, value, props"
+            f" from {f}"
         )
     if table == "embeddings":
-        return f"select vec_id + {c} as vec_id, embedding, label from {f}"
+        return f"select vec_id + {o['vec_id']} as vec_id, embedding, label from {f}"
     raise ValueError(table)
 
 
@@ -116,12 +133,14 @@ def main() -> None:
     args = ap.parse_args()
     os.makedirs(args.out, exist_ok=True)
     con = duckdb.connect()
+    offsets = key_offsets(con, args.src)
 
     for table in (
         "region nation customer supplier part orders lineitem events embeddings"
     ).split():
         parts = [
-            s for r in range(args.factor) if (s := scale_sql(table, args.src, r))
+            s for r in range(args.factor)
+            if (s := scale_sql(table, args.src, r, offsets))
         ]
         sql = " union all ".join(parts)
         con.sql(
@@ -138,7 +157,7 @@ def main() -> None:
     frames = []
     for r in range(args.factor):
         d = src_docs.copy()
-        d["doc_id"] = d["doc_id"] + OFFSETS["documents"] * r
+        d["doc_id"] = d["doc_id"] + offsets["doc_id"] * r
         if r > 0:
             d["text"] = d["text"].map(lambda t, _r=r: rewrite_doc(t, _r))
             d["n_chars"] = d["text"].map(
