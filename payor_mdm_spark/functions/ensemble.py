@@ -4,12 +4,12 @@ Re-expresses the reference's ``ENSEMBLE_MATCH_SCORE`` scalar Python UDF
 (/root/reference/snowflake/11_ensemble_udfs.sql:411-645) — a per-field,
 data-characteristic strategy router with a weighted composite — as:
 
-* ONE Arrow-vectorized pandas UDF for the string-similarity fields
-  (name + address routers, tax transpose detection), returning a typed
-  StructType so Catalyst can prune struct fields; and
-* native column expressions for everything cheap (phone / cms strategies,
-  winner-take-max, composite weighting + renormalization), which stay inside
-  WholeStageCodegen.
+* ONE Arrow-vectorized pandas UDF for the string-similarity fields (the
+  name and address routers), returning a typed StructType so Catalyst can
+  prune struct fields; and
+* native column expressions for everything cheap (tax exact/transpose,
+  phone / cms strategies, winner-take-max, composite weighting +
+  renormalization), which stay inside WholeStageCodegen.
 
 Routing, strategy names, weights, rounding (4 dp) and tie-breaking (first
 max in insertion order) match the reference exactly:
@@ -35,7 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
-    ArrayType, DoubleType, StringType, StructField, StructType,
+    DoubleType, StringType, StructField, StructType,
 )
 
 from payor_mdm_spark.config import ABBREVS, FIELD_WEIGHTS
@@ -48,10 +48,18 @@ STRING_SCORES_SCHEMA = StructType(
         StructField("name_strategy", StringType()),
         StructField("addr_score", DoubleType()),
         StructField("addr_strategy", StringType()),
-        StructField("tax_score", DoubleType()),
-        StructField("tax_strategy", StringType()),
     ]
 )
+
+
+def _first_max(*candidates: tuple[float, str]) -> tuple[float, str]:
+    """The first (score, strategy) with the highest score: the reference's
+    max over an insertion-ordered dict of tried strategies."""
+    best = candidates[0]
+    for c in candidates[1:]:
+        if c[0] > best[0]:
+            best = c
+    return best
 
 
 def route_name(
@@ -67,31 +75,28 @@ def route_name(
     ``jw``/``tri`` are optional PRE-ROUNDED scores from the batched C
     kernels (one ctypes call per Arrow batch) — when given they replace
     the per-call kernel invocations, bit-identically."""
-    table = ABBREVS if abbrevs is None else abbrevs
-    has_abbrev = any(t in table for t in a.split()) or any(
-        t in table for t in b.split()
-    )
+    keys = (ABBREVS if abbrevs is None else abbrevs).keys()
+    if not (keys.isdisjoint(a.split()) and keys.isdisjoint(b.split())):
+        return _first_max(
+            (sim.name_abr(a, b, abbrevs), "NAME_ABR"),
+            (jw if jw is not None else sim.name_jw(a, b), "NAME_JW"),
+            (sim.token_sort_ratio(a, b), "NAME_TSR"),
+        )
     mx = max(len(a), len(b))
-    len_ratio = min(len(a), len(b)) / mx if mx > 0 else 1.0
-
-    results: dict[str, float] = {}
-    if has_abbrev:
-        results["NAME_ABR"] = sim.name_abr(a, b, abbrevs)
-        results["NAME_JW"] = jw if jw is not None else sim.name_jw(a, b)
-        results["NAME_TSR"] = sim.token_sort_ratio(a, b)
-    elif len_ratio < 0.6:
-        results["NAME_TSR"] = sim.token_sort_ratio(a, b)
-        results["NAME_ABR"] = sim.name_abr(a, b, abbrevs)
-    elif mx <= 20:
-        results["NAME_JW"] = jw if jw is not None else sim.name_jw(a, b)
-        results["NAME_PHO"] = phonetic_equal(a, b)
-        results["NAME_NGR"] = tri if tri is not None else sim.trigram_cosine(a, b)
-    else:
-        results["NAME_JW"] = jw if jw is not None else sim.name_jw(a, b)
-        results["NAME_NGR"] = tri if tri is not None else sim.trigram_cosine(a, b)
-
-    winner = max(results, key=results.get)  # first max in insertion order
-    return results[winner], winner
+    if (min(len(a), len(b)) / mx if mx > 0 else 1.0) < 0.6:
+        return _first_max(
+            (sim.token_sort_ratio(a, b), "NAME_TSR"),
+            (sim.name_abr(a, b, abbrevs), "NAME_ABR"),
+        )
+    if jw is None:
+        jw = sim.name_jw(a, b)
+    if tri is None:
+        tri = sim.trigram_cosine(a, b)
+    if mx <= 20:
+        return _first_max(
+            (jw, "NAME_JW"), (phonetic_equal(a, b), "NAME_PHO"), (tri, "NAME_NGR")
+        )
+    return (tri, "NAME_NGR") if tri > jw else (jw, "NAME_JW")
 
 
 def route_addr(
@@ -125,6 +130,8 @@ def route_addr(
 
 
 def score_tax(a: str | None, b: str | None) -> tuple[float | None, str | None]:
+    """Python reference for the tax field; the pipeline scores tax with its
+    native clone ``tax_score_cols``."""
     if not a or not b:
         return None, None
     da, db = sim.digits_only(a), sim.digits_only(b)
@@ -148,11 +155,8 @@ def make_string_scores_udf(abbrevs: dict[str, str] | None = None):
     def _string_scores_udf(
         name_a: pd.Series, name_b: pd.Series,
         addr_a: pd.Series, addr_b: pd.Series,
-        tax_a: pd.Series, tax_b: pd.Series,
     ) -> pd.DataFrame:
-        return _string_scores_batch(
-            name_a, name_b, addr_a, addr_b, tax_a, tax_b, abbrevs
-        )
+        return _string_scores_batch(name_a, name_b, addr_a, addr_b, abbrevs)
 
     return _string_scores_udf
 
@@ -160,22 +164,20 @@ def make_string_scores_udf(abbrevs: dict[str, str] | None = None):
 def _string_scores_batch(
     name_a: pd.Series, name_b: pd.Series,
     addr_a: pd.Series, addr_b: pd.Series,
-    tax_a: pd.Series, tax_b: pd.Series,
     abbrevs: dict[str, str] | None = None,
 ) -> pd.DataFrame:
     """Batched string-field scoring. One Arrow batch in, one struct column
     out; the per-value loop runs over an in-memory batch (no per-row
-    Python<->JVM crossings, per input_hint 'no per-row Python')."""
-    table = ABBREVS if abbrevs is None else abbrevs
+    Python<->JVM crossings, per input_hint 'no per-row Python'). The
+    kernel normalizes, batches the C kernels and memoizes; every strategy
+    is picked by route_name / route_addr."""
     n = len(name_a)
     out = {
         "name_score": [None] * n, "name_strategy": [None] * n,
         "addr_score": [None] * n, "addr_strategy": [None] * n,
-        "tax_score": [None] * n, "tax_strategy": [None] * n,
     }
     na_l, nb_l = name_a.tolist(), name_b.tolist()
     aa_l, ab_l = addr_a.tolist(), addr_b.tolist()
-    ta_l, tb_l = tax_a.tolist(), tax_b.tolist()
     # per-batch memos, not cross-batch caches: repeated (a, b) pairs within
     # one Arrow batch are common (a record takes part in many candidate
     # pairs), and the dicts die with the batch, so the working set stays
@@ -185,28 +187,15 @@ def _string_scores_batch(
     # fell from 163k to 43k pairs/s at local[32]).
     name_memo: dict = {}
 
-    # pass 1: normalize names, take the identical fast path, collect the
-    # rows that need the router
+    # pass 1: normalize names, collect the rows that need the router
     ua_l: list = [None] * n
     ub_l: list = [None] * n
     routed: list[int] = []
     for i in range(n):
         na, nb = na_l[i], nb_l[i]
         if na and nb:
-            ua, ub = na.upper().strip(), nb.upper().strip()
-            ua_l[i], ub_l[i] = ua, ub
-            if ua == ub and ua:
-                # identical-string fast path: every routed strategy scores
-                # 1.0, so the winner is the first strategy the router would
-                # try — NAME_ABR when an abbreviation token is present,
-                # else NAME_JW (len_ratio == 1.0 skips the TSR branch).
-                # Equivalence with route_name is pinned by
-                # tests/test_ensemble_spark.py::test_identical_fast_path.
-                has_abbrev = any(t in table for t in ua.split())
-                out["name_score"][i] = 1.0
-                out["name_strategy"][i] = "NAME_ABR" if has_abbrev else "NAME_JW"
-            else:
-                routed.append(i)
+            ua_l[i], ub_l[i] = na.upper().strip(), nb.upper().strip()
+            routed.append(i)
 
     # pass 2: ONE batched C call for the JW + trigram scores of every
     # routed row (bit-identical values; rows the C side cannot take are
@@ -221,23 +210,8 @@ def _string_scores_batch(
         if batched is not None:
             jw_arr, tri_arr, fb_arr = batched
 
-    # pass 3: route, feeding the precomputed kernels in. The dominant route
-    # on real name data (no abbreviation token, len ratio >= 0.6, max len
-    # > 20 -> try [NAME_JW, NAME_NGR]) is fully determined by the two
-    # C-batched scores, so it is resolved inline — same table lookups,
-    # same ratio arithmetic (mn/mx, not a rearranged comparison), same
-    # first-max-in-insertion-order tie-break — and only the minority
-    # routes (abbrev / short / low-ratio / non-ASCII fallback) pay the
-    # route_name call.
-    abbrev_memo: dict = {}
-
-    def _has_abbrev(u: str) -> bool:
-        v = abbrev_memo.get(u)
-        if v is None:
-            v = any(t in table for t in u.split())
-            abbrev_memo[u] = v
-        return v
-
+    # pass 3: route each distinct pair once, feeding the precomputed
+    # kernel scores in
     ns_out, nst_out = out["name_score"], out["name_strategy"]
     for k, i in enumerate(routed):
         ua, ub = ua_l[i], ub_l[i]
@@ -248,52 +222,17 @@ def _string_scores_batch(
             if jw_arr is not None and not fb_arr[k]:
                 jw = round(float(jw_arr[k]), 4)
                 tri = round(float(tri_arr[k]), 4)
-            la = len(ua)
-            lb = len(ub)
-            mx = lb if lb > la else la
-            mn = la if la < lb else lb
-            if (
-                jw is not None
-                and mx > 20
-                and mn / mx >= 0.6
-                and not _has_abbrev(ua)
-                and not _has_abbrev(ub)
-            ):
-                hit = (tri, "NAME_NGR") if tri > jw else (jw, "NAME_JW")
-            else:
-                hit = route_name(ua, ub, abbrevs, jw=jw, tri=tri)
+            hit = route_name(ua, ub, abbrevs, jw=jw, tri=tri)
             name_memo[key] = hit
         ns_out[i], nst_out[i] = hit
-    # addr pass 1: fast paths; group the rows needing the router by
-    # distinct (ua, ub) pair so each pair routes once
+
+    # addr pass 1: group the rows by distinct (ua, ub) pair so each pair
+    # routes once
     pending: dict = {}  # (ua, ub) -> list of row indices
     for i in range(n):
         aa, ab = aa_l[i], ab_l[i]
         if aa and ab:
-            ua, ub = aa.upper().strip(), ab.upper().strip()
-            tok0_digit = ua.split()[0].replace("-", "").isdigit() if ua.split() else False
-            has_num = any(c.isdigit() for c in ua[:10])
-            if ua == ub and ua and (not has_num or tok0_digit):
-                # identical fast path is exact only when the router's
-                # winning strategy provably scores 1.0: CMP with a parsed
-                # street number, or JAC with a non-empty stopword-stripped
-                # token set (empty set -> Jaccard 0.0 in the reference,
-                # 11_ensemble_udfs.sql:503).
-                if has_num:
-                    out["addr_score"][i] = 1.0
-                    out["addr_strategy"][i] = "ADDR_CMP"
-                else:
-                    nonstop = bool(sim._addr_tokens(ua))
-                    out["addr_score"][i] = 1.0 if nonstop else 0.0
-                    out["addr_strategy"][i] = "ADDR_JAC"
-            else:
-                pending.setdefault((ua, ub), []).append(i)
-        # score_tax returns (None, None) unless both values are truthy —
-        # guard here so the common all-null tax batch (the pipeline scores
-        # tax natively and sends NULLs) skips n function calls
-        ta, tb = ta_l[i], tb_l[i]
-        if ta and tb:
-            out["tax_score"][i], out["tax_strategy"][i] = score_tax(ta, tb)
+            pending.setdefault((aa.upper().strip(), ab.upper().strip()), []).append(i)
 
     # addr pass 2: collect every JW input the has_num route will need
     # (unequal parsed num/name components, unequal normalized strings),
@@ -374,23 +313,18 @@ def _string_scores_batch(
     return pd.DataFrame(out)
 
 
-# default-table instance (the common path; custom dictionaries build their
-# own closure via make_string_scores_udf)
-string_scores_udf = make_string_scores_udf()
-
-
 def _digits(col: Column) -> Column:
     return F.regexp_replace(F.coalesce(col, F.lit("")), "[^0-9]", "")
 
 
 # ---------------------------------------------------------------------------
-# Native fast paths (VERDICT r01 item 5 — the DET/FUZZY DataFrame split).
+# Native fast paths (VERDICT r01 item 5 — the DET/FUZZY split).
 # Rows whose string fields are decidable without the Python router (either
 # side null/empty, or identical values whose winning strategy provably
-# scores 1.0) are scored with the column expressions below and never enter
-# the Arrow UDF; only rows that genuinely need route_name/route_addr pay
-# the Python cost. Each expression is a bit-exact clone of the
-# corresponding branch in string_scores_udf / score_tax — equivalence is
+# scores 1.0) are scored with the column expressions below and send NULL
+# inputs to the Arrow UDF; only rows that genuinely need route_name /
+# route_addr pay the Python cost. Each expression is a bit-exact clone of
+# what the routers (and score_tax) return for those rows — equivalence is
 # pinned by tests/test_ensemble_spark.py.
 # ---------------------------------------------------------------------------
 
@@ -561,9 +495,7 @@ def composite_col(
 
 
 def apply_ensemble(
-    pairs: DataFrame,
-    split_fast_path: bool = True,
-    abbrevs: dict[str, str] | None = None,
+    pairs: DataFrame, abbrevs: dict[str, str] | None = None
 ) -> DataFrame:
     """Add ensemble score columns to a rehydrated pair DataFrame.
 
@@ -572,16 +504,18 @@ def apply_ensemble(
     score_name, score_exact_key_1, score_address, score_phone,
     score_exact_key_2 + winning strategies + strategies_used + composite.
 
-    DET/FUZZY DataFrame split (SURVEY §4, VERDICT r01 item 5): tax is
-    scored natively for every row; rows whose name AND address are
-    fast-path decidable (null/empty or provably-1.0 identical) take a pure
-    column-expression branch, and ONLY the remainder flows through the
-    Arrow string router UDF. The two branches union back; results are
-    bit-identical to routing every row through the UDF
-    (split_fast_path=False keeps the old single-branch plan for A/B
-    testing).
+    DET/FUZZY split in ONE plan (SURVEY §4, VERDICT r01 item 5): tax, phone
+    and cms are scored natively for every row. Rows whose name AND address
+    are fast-path decidable (null/empty or provably-1.0 identical) take
+    the native name/address values and send NULL inputs to the Arrow
+    string-router UDF (a null column crosses the boundary as a validity
+    bitmap and the kernel skips it); every other row is scored by the UDF.
+    Masking rather than a filter+union keeps the (join-heavy) upstream
+    lineage evaluated once. Results are bit-identical to routing every
+    row through route_name / route_addr / score_tax (pinned by
+    tests/test_ensemble_spark.py).
     """
-    udf = string_scores_udf if abbrevs is None else make_string_scores_udf(abbrevs)
+    udf = make_string_scores_udf(abbrevs)
     tax_s, tax_strat = tax_score_cols(
         F.col("exact_key_1_a"), F.col("exact_key_1_b")
     )
@@ -591,67 +525,37 @@ def apply_ensemble(
     addr_dec, addr_s_fast, addr_strat_fast = addr_fast_path(
         F.col("addr_a"), F.col("addr_b")
     )
+    fast_cond = name_dec & addr_dec
 
-    if split_fast_path:
-        # single-branch split (r06): the old filter+union form evaluated the
-        # (join-heavy) upstream lineage TWICE — once per branch — which in
-        # the pipeline re-ran the full pair rehydration joins. Instead, rows
-        # stay in ONE plan: fast-path rows send NULL inputs through the
-        # Arrow UDF (a null column crosses the boundary as a validity
-        # bitmap — the kernel sees falsy values and skips all routing work)
-        # and the output columns pick the native fast-path value where it
-        # is decidable. The tax inputs are always NULL: score_exact_key_1
-        # comes from the native tax_score_cols below in both shapes, so the
-        # UDF's per-row score_tax work was computed and discarded.
-        # Bit-identical to the union form (pinned by test_ensemble_spark).
-        fast_cond = name_dec & addr_dec
+    def _mask(c: Column) -> Column:
+        return F.when(~fast_cond, c)
 
-        def _mask(c: Column) -> Column:
-            return F.when(~fast_cond, c)
-
-        df = (
-            pairs.withColumn(
-                "_str",
-                udf(
-                    _mask(F.col("name_a")), _mask(F.col("name_b")),
-                    _mask(F.col("addr_a")), _mask(F.col("addr_b")),
-                    F.lit(None).cast("string"), F.lit(None).cast("string"),
-                ),
-            )
-            .withColumn(
-                "score_name",
-                F.when(fast_cond, name_s_fast).otherwise(F.col("_str.name_score")),
-            )
-            .withColumn(
-                "winning_name_strategy",
-                F.when(fast_cond, name_strat_fast).otherwise(F.col("_str.name_strategy")),
-            )
-            .withColumn(
-                "score_address",
-                F.when(fast_cond, addr_s_fast).otherwise(F.col("_str.addr_score")),
-            )
-            .withColumn(
-                "winning_addr_strategy",
-                F.when(fast_cond, addr_strat_fast).otherwise(F.col("_str.addr_strategy")),
-            )
-            .drop("_str")
+    df = (
+        pairs.withColumn(
+            "_str",
+            udf(
+                _mask(F.col("name_a")), _mask(F.col("name_b")),
+                _mask(F.col("addr_a")), _mask(F.col("addr_b")),
+            ),
         )
-    else:
-        df = (
-            pairs.withColumn(
-                "_str",
-                udf(
-                    F.col("name_a"), F.col("name_b"),
-                    F.col("addr_a"), F.col("addr_b"),
-                    F.col("exact_key_1_a"), F.col("exact_key_1_b"),
-                ),
-            )
-            .withColumn("score_name", F.col("_str.name_score"))
-            .withColumn("winning_name_strategy", F.col("_str.name_strategy"))
-            .withColumn("score_address", F.col("_str.addr_score"))
-            .withColumn("winning_addr_strategy", F.col("_str.addr_strategy"))
-            .drop("_str")
+        .withColumn(
+            "score_name",
+            F.when(fast_cond, name_s_fast).otherwise(F.col("_str.name_score")),
         )
+        .withColumn(
+            "winning_name_strategy",
+            F.when(fast_cond, name_strat_fast).otherwise(F.col("_str.name_strategy")),
+        )
+        .withColumn(
+            "score_address",
+            F.when(fast_cond, addr_s_fast).otherwise(F.col("_str.addr_score")),
+        )
+        .withColumn(
+            "winning_addr_strategy",
+            F.when(fast_cond, addr_strat_fast).otherwise(F.col("_str.addr_strategy")),
+        )
+        .drop("_str")
+    )
 
     phone_s, phone_strat = phone_score_cols(F.col("phone_a"), F.col("phone_b"))
     cms_s, cms_strat = cms_score_cols(F.col("exact_key_2_a"), F.col("exact_key_2_b"))

@@ -68,6 +68,13 @@ def get_lib():
     lib.trigram_cosine_c.argtypes = [
         ctypes.c_char_p, ctypes.c_int, ctypes.c_char_p, ctypes.c_int,
     ]
+    for fn in (lib.jaro_winkler_batch, lib.trigram_cosine_batch):
+        fn.restype = None
+        fn.argtypes = [
+            ctypes.c_char_p, ctypes.POINTER(ctypes.c_int32),
+            ctypes.c_char_p, ctypes.POINTER(ctypes.c_int32),
+            ctypes.c_int, ctypes.POINTER(ctypes.c_double),
+        ]
     _lib = lib
     return _lib
 
@@ -91,81 +98,11 @@ def native_trigram_cosine(a: str, b: str) -> float | None:
     return None if r < 0.0 else r
 
 
-_batch_bound = False
-
-
-def _bind_batch(lib) -> None:
-    global _batch_bound
-    if _batch_bound:
-        return
-    import numpy as np  # noqa: F401  (ensures ctypeslib deps present)
-
-    for fn in (lib.jaro_winkler_batch, lib.trigram_cosine_batch):
-        fn.restype = None
-        fn.argtypes = [
-            ctypes.c_char_p, ctypes.POINTER(ctypes.c_int32),
-            ctypes.c_char_p, ctypes.POINTER(ctypes.c_int32),
-            ctypes.c_int, ctypes.POINTER(ctypes.c_double),
-        ]
-    _batch_bound = True
-
-
-def batch_jw_tri(names_a, names_b):
-    """One ctypes call per Arrow batch instead of two per pair.
-
-    Inputs: equal-length lists of ALREADY upper/stripped strings (no
-    Nones). Returns (jw, tri, fallback) numpy arrays where fallback[i] is
-    True for rows the C kernels cannot take (non-ASCII, >1024 bytes) —
-    those rows score through the per-call Python path, keeping results
-    bit-identical everywhere. None when no native library is available.
-    """
-    lib = get_lib()
-    if lib is None:
-        return None
-    _bind_batch(lib)
-    import numpy as np
-
-    n = len(names_a)
-    enc_a = [b""] * n
-    enc_b = [b""] * n
-    fallback = np.zeros(n, dtype=bool)
-    for i in range(n):
-        x, y = names_a[i], names_b[i]
-        if x.isascii() and y.isascii():
-            enc_a[i] = x.encode()
-            enc_b[i] = y.encode()
-        else:
-            fallback[i] = True
-    offa = np.zeros(n + 1, dtype=np.int32)
-    offb = np.zeros(n + 1, dtype=np.int32)
-    np.cumsum([len(s) for s in enc_a], out=offa[1:])
-    np.cumsum([len(s) for s in enc_b], out=offb[1:])
-    bufa = b"".join(enc_a)
-    bufb = b"".join(enc_b)
-    jw = np.empty(n, dtype=np.float64)
-    tri = np.empty(n, dtype=np.float64)
-    p_i32 = ctypes.POINTER(ctypes.c_int32)
-    p_f64 = ctypes.POINTER(ctypes.c_double)
-    lib.jaro_winkler_batch(
-        bufa, offa.ctypes.data_as(p_i32), bufb, offb.ctypes.data_as(p_i32),
-        n, jw.ctypes.data_as(p_f64),
-    )
-    lib.trigram_cosine_batch(
-        bufa, offa.ctypes.data_as(p_i32), bufb, offb.ctypes.data_as(p_i32),
-        n, tri.ctypes.data_as(p_f64),
-    )
-    # -1.0 = over-long sentinel from the C side
-    fallback |= (jw < 0.0) | (tri < 0.0)
-    return jw, tri, fallback
-
-
-def batch_jw(strs_a, strs_b):
-    """JW-only batch (addr component/normalized pairs): one ctypes call.
-    Returns (jw, fallback) numpy arrays, or None without a native lib."""
-    lib = get_lib()
-    if lib is None:
-        return None
-    _bind_batch(lib)
+def _pack(strs_a, strs_b):
+    """Pack two equal-length string lists into the C batch layout: one
+    ASCII byte buffer and n + 1 int32 offsets per side. Returns
+    ((buf_a, off_a, buf_b, off_b), fallback) where fallback[i] is True
+    for the non-ASCII rows, which are packed as empty strings."""
     import numpy as np
 
     n = len(strs_a)
@@ -183,13 +120,51 @@ def batch_jw(strs_a, strs_b):
     offb = np.zeros(n + 1, dtype=np.int32)
     np.cumsum([len(s) for s in enc_a], out=offa[1:])
     np.cumsum([len(s) for s in enc_b], out=offb[1:])
-    jw = np.empty(n, dtype=np.float64)
+    return (b"".join(enc_a), offa, b"".join(enc_b), offb), fallback
+
+
+def _run(fn, packed):
+    """Call one C batch kernel over a ``_pack`` result; float64 scores."""
+    import numpy as np
+
+    bufa, offa, bufb, offb = packed
+    n = len(offa) - 1
     p_i32 = ctypes.POINTER(ctypes.c_int32)
-    p_f64 = ctypes.POINTER(ctypes.c_double)
-    lib.jaro_winkler_batch(
-        b"".join(enc_a), offa.ctypes.data_as(p_i32),
-        b"".join(enc_b), offb.ctypes.data_as(p_i32),
-        n, jw.ctypes.data_as(p_f64),
+    res = np.empty(n, dtype=np.float64)
+    fn(
+        bufa, offa.ctypes.data_as(p_i32), bufb, offb.ctypes.data_as(p_i32),
+        n, res.ctypes.data_as(ctypes.POINTER(ctypes.c_double)),
     )
+    return res
+
+
+def batch_jw_tri(names_a, names_b):
+    """One ctypes call per Arrow batch instead of two per pair.
+
+    Inputs: equal-length lists of ALREADY upper/stripped strings (no
+    Nones). Returns (jw, tri, fallback) numpy arrays where fallback[i] is
+    True for rows the C kernels cannot take (non-ASCII, >1024 bytes) —
+    those rows score through the per-call Python path, keeping results
+    bit-identical everywhere. None when no native library is available.
+    """
+    lib = get_lib()
+    if lib is None:
+        return None
+    packed, fallback = _pack(names_a, names_b)
+    jw = _run(lib.jaro_winkler_batch, packed)
+    tri = _run(lib.trigram_cosine_batch, packed)
+    # -1.0 = over-long sentinel from the C side
+    fallback |= (jw < 0.0) | (tri < 0.0)
+    return jw, tri, fallback
+
+
+def batch_jw(strs_a, strs_b):
+    """JW-only batch (addr component/normalized pairs): one ctypes call.
+    Returns (jw, fallback) numpy arrays, or None without a native lib."""
+    lib = get_lib()
+    if lib is None:
+        return None
+    packed, fallback = _pack(strs_a, strs_b)
+    jw = _run(lib.jaro_winkler_batch, packed)
     fallback |= jw < 0.0
     return jw, fallback

@@ -40,6 +40,21 @@ from pyspark.sql.window import Window
 _ID = "source_record_id"
 
 
+def truncate_lineage(
+    df: DataFrame, round_: int, store, store_every: int, store_prefix: str
+) -> DataFrame:
+    """Materialize one round of a fixpoint loop. Every ``store_every``-th
+    round is committed to ``store`` (when given) under one of two
+    alternating table names, so a commit never overwrites the table the
+    current lineage reads from, and the loop resumes from the committed
+    table; every other round is an eager ``localCheckpoint``."""
+    if store is not None and (round_ + 1) % store_every == 0:
+        tbl = f"{store_prefix}_{(round_ // store_every) % 2}"
+        store.write(tbl, df)
+        return store.read(tbl)
+    return df.localCheckpoint(eager=True)
+
+
 def propagate_labels(
     edges: DataFrame,
     nodes: DataFrame,
@@ -105,12 +120,9 @@ def propagate_labels(
         # truncate lineage EVERY round so the convergence count and the
         # next round both read materialized labels instead of re-running
         # the whole join cascade; periodically durable when a store is given
-        if store is not None and (_round + 1) % store_every == 0:
-            tbl = f"{store_prefix}_{(_round // store_every) % 2}"
-            store.write(tbl, new_labels)
-            new_labels = store.read(tbl)
-        else:
-            new_labels = new_labels.localCheckpoint(eager=True)
+        new_labels = truncate_lineage(
+            new_labels, _round, store, store_every, store_prefix
+        )
         changed = new_labels.filter(
             F.col("component") < F.col("old_component")
         ).count()

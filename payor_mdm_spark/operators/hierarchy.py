@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from payor_mdm_spark.functions.textnorm import deterministic_id
+from payor_mdm_spark.operators.clustering import truncate_lineage
 
 _GRAM_K = 6  # == the reference's minimum parent-name length (J7 predicate)
 
@@ -282,12 +283,7 @@ def tree_paths(
                 (F.col("depth") + F.coalesce(F.col("_d2"), F.lit(0))).alias("depth"),
             )
         )
-        if store is not None and (_round + 1) % store_every == 0:
-            tbl = f"{store_prefix}_{(_round // store_every) % 2}"
-            store.write(tbl, state)
-            state = store.read(tbl)
-        else:
-            state = state.localCheckpoint(eager=True)
+        state = truncate_lineage(state, _round, store, store_every, store_prefix)
         # fixpoint: every node already points at its root, so no depth grew
         total = state.select(F.sum("depth")).first()[0] or 0
         if total == prev_total:

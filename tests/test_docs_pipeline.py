@@ -291,3 +291,60 @@ def test_incremental_guards(spark, tmp_path):
     )
     process_docs_batch(spark, store, delta)
     assert store.exists("doc_packed")  # bootstrap re-ran and committed
+
+
+@pytest.mark.parametrize("hash_mode", ["md5", "xxhash64"])
+def test_minhash_band_key_hash_adds_no_candidate_pairs(spark, corpus, hash_mode):
+    """The band join keys on an 8-byte xxhash64 of each band's signature
+    rows, not on the rows themselves. A hash collision could only ADD a
+    candidate pair; on this corpus the distinct candidate pair set must
+    equal a reference keyed on the raw band rows: the ``|``-joined string
+    the DuckDB twin uses in md5 mode, the array of rows in xxhash64 mode."""
+    from payor_mdm_spark.operators.blocking import _pairs_within_blocks, _with_signature
+    from payor_mdm_spark.operators.dedup import _minhash_band_members
+
+    num_hashes, bands = 64, 16  # minhash_dedup_pairs defaults
+    rows_per_band = num_hashes // bands
+    sig = (
+        _with_signature(
+            corpus.select(F.col("doc_id").alias("source_record_id"), "text"),
+            "text", num_hashes, 5, hash_mode=hash_mode,
+        )
+        .select("source_record_id", "_sig")
+        .localCheckpoint(eager=True)
+    )
+    hashed = _pairs_within_blocks(
+        _minhash_band_members(sig, bands, rows_per_band, hash_mode),
+        ["_band", "_bucket"], 500,
+    ).select("source_record_id_a", "source_record_id_b")
+
+    def raw_key(b):
+        rows = [
+            F.element_at("_sig", b * rows_per_band + r + 1)
+            for r in range(rows_per_band)
+        ]
+        if hash_mode == "md5":
+            return F.concat_ws("|", *[r.cast("string") for r in rows])
+        return F.array(*rows)
+
+    members = sig.select(
+        F.explode(F.array(*[
+            F.struct(F.lit(b).alias("band"), raw_key(b).alias("key"))
+            for b in range(bands)
+        ])).alias("m"),
+        "source_record_id",
+    ).select("m.band", "m.key", "source_record_id")
+    side_a = members.withColumnRenamed("source_record_id", "source_record_id_a")
+    side_b = members.withColumnRenamed("source_record_id", "source_record_id_b")
+    raw = (
+        side_a.join(side_b, ["band", "key"])
+        .filter(F.col("source_record_id_a") < F.col("source_record_id_b"))
+        .select("source_record_id_a", "source_record_id_b")
+    )
+
+    def pair_set(df):
+        return {tuple(r) for r in df.distinct().collect()}
+
+    want = pair_set(raw)
+    assert want  # the injected duplicates share every band
+    assert pair_set(hashed) == want

@@ -117,7 +117,7 @@ def test_len_ratio_routes_to_tsr(scored):
 
 
 def test_identical_fast_path_matches_full_router(spark):
-    """The UDF's identical-string fast path must agree with route_name /
+    """The native identical-string fast path must agree with route_name /
     route_addr exactly."""
     cases = [
         ("BCBS OF TEXAS", "100 MAIN ST DALLAS TX"),
@@ -163,22 +163,44 @@ EDGE_PAIRS = [
 ]
 
 
+_ROUTED = [
+    "score_name", "winning_name_strategy", "score_address",
+    "winning_addr_strategy", "score_exact_key_1", "winning_tax_strategy",
+]
+
+
+def _plan_vs_kernel(spark, rows):
+    """apply_ensemble's routed columns next to a local reference that sends
+    EVERY row through the Python kernel and score_tax (no native fast
+    path), both in input order (pandas NaN compared as None)."""
+    import pandas as pd
+
+    from payor_mdm_spark.functions.ensemble import _string_scores_batch, score_tax
+
+    df = spark.createDataFrame(
+        [(i, *r) for i, r in enumerate(rows)], "_i int, " + _SCHEMA
+    )
+    got = [[r[c] for c in _ROUTED]
+           for r in sorted(apply_ensemble(df).collect(), key=lambda r: r._i)]
+
+    def col(k):
+        return pd.Series([r[k] for r in rows], dtype=object)
+
+    out = _string_scores_batch(col(0), col(1), col(4), col(5))
+    out = out.astype(object).where(out.notna(), None)
+    want = [
+        [o.name_score, o.name_strategy, o.addr_score, o.addr_strategy,
+         *score_tax(r[2], r[3])]
+        for o, r in zip(out.itertuples(), rows)
+    ]
+    return got, want
+
+
 def test_split_fast_path_equivalence(spark):
     """The DET/FUZZY split must be bit-identical to routing every row
-    through the UDF (VERDICT r01 item 5)."""
-    df = spark.createDataFrame(PAIRS + EDGE_PAIRS, _SCHEMA)
-    cols = [
-        "score_name", "winning_name_strategy", "score_address",
-        "winning_addr_strategy", "score_exact_key_1", "winning_tax_strategy",
-        "score_phone", "score_exact_key_2", "strategies_used", "composite",
-    ]
-    key = ["name_a", "name_b", "addr_a", "addr_b", "exact_key_1_a",
-           "exact_key_1_b", "phone_a", "exact_key_2_a"]
-    split = {tuple((r[k] or "") for k in key): [r[c] for c in cols]
-             for r in apply_ensemble(df, split_fast_path=True).collect()}
-    mono = {tuple((r[k] or "") for k in key): [r[c] for c in cols]
-            for r in apply_ensemble(df, split_fast_path=False).collect()}
-    assert split == mono
+    through the kernel and score_tax (VERDICT r01 item 5)."""
+    got, want = _plan_vs_kernel(spark, PAIRS + EDGE_PAIRS)
+    assert got == want
 
 
 def test_split_fast_path_skips_udf_for_det3_shape(spark):
@@ -203,7 +225,7 @@ def test_split_fast_path_skips_udf_for_det3_shape(spark):
     assert det3.filter(name_dec & addr_dec).count() == 1
 
     plan = (
-        apply_ensemble(df, split_fast_path=True)
+        apply_ensemble(df)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert plan.count("ArrowEvalPython") == 1  # exactly one Python node
@@ -214,9 +236,9 @@ def test_split_fast_path_skips_udf_for_det3_shape(spark):
 
 def test_split_equivalence_whitespace_torture(spark):
     """Exotic whitespace (tabs, NBSP, controls, whitespace-only values)
-    must NOT diverge between the native fast path and the UDF — the
-    _fastpath_clean guard routes anything Python's strip()/split() would
-    treat differently to the UDF."""
+    must NOT diverge between the native fast path and the per-row kernel
+    reference — the _fastpath_clean guard routes anything Python's
+    strip()/split() would treat differently to the UDF."""
     ws_names = [
         "\t", "  ", "\xa0", "A\t", "\tA", "A\xa0", "\xa0BCBS",
         "BCBS\xa0OF TEXAS", "BCBS\x1cOF", "A  B", "A\x85B", "BCBS ",
@@ -232,26 +254,14 @@ def test_split_equivalence_whitespace_torture(spark):
     # also non-identical exotic pairs (must go to UDF and agree trivially)
     rows += [(a, b, None, None, None, None, None, None, None, None)
              for a in ws_names[:4] for b in ws_names[4:8]]
-    df = spark.createDataFrame(rows, _SCHEMA)
-    cols = ["score_name", "winning_name_strategy", "score_address",
-            "winning_addr_strategy", "composite"]
-    key = ["name_a", "name_b", "addr_a", "addr_b"]
-
-    def snap(frame):
-        return {
-            tuple((r[k] or "") for k in key): [r[c] for c in cols]
-            for r in frame.collect()
-        }
-
-    split = snap(apply_ensemble(df, split_fast_path=True))
-    mono = snap(apply_ensemble(df, split_fast_path=False))
-    assert split == mono
+    got, want = _plan_vs_kernel(spark, rows)
+    assert got == want
 
 
 def test_split_equivalence_seeded_fuzz(spark):
     """500 seeded random pairs over an exotic alphabet (unicode whitespace,
-    controls, CJK punctuation, digit/stopword fragments): the split and
-    mono plans must agree on every score and strategy."""
+    controls, CJK punctuation, digit/stopword fragments): the plan must
+    agree with the per-row kernel reference on every score and strategy."""
     import random
 
     rng = random.Random(1234)
@@ -273,21 +283,14 @@ def test_split_equivalence_seeded_fuzz(spark):
         return rng.choice(["", " ", "\t", "\xa0"]).join(parts)
 
     rows = []
-    for i in range(500):
+    for _ in range(500):
         a = rand_str()
         b = a if rng.random() < 0.5 else rand_str()
         ta = rng.choice([None, "", "12-3456789", "123456789", "12345678", "ABC", "1 2 3"])
         tb = rng.choice([None, "", "12-3456789", "123456798", "12345678", "ABC"])
         aa = rand_str()
         ab = aa if rng.random() < 0.6 else rand_str()
-        rows.append((i, a, b, ta, tb, aa, ab, None, None, None, None))
+        rows.append((a, b, ta, tb, aa, ab, None, None, None, None))
 
-    df = spark.createDataFrame(rows, "_i int, " + _SCHEMA)
-    cols = ["score_name", "winning_name_strategy", "score_address",
-            "winning_addr_strategy", "score_exact_key_1", "winning_tax_strategy",
-            "composite"]
-    split = {r._i: [r[c] for c in cols]
-             for r in apply_ensemble(df, split_fast_path=True).collect()}
-    mono = {r._i: [r[c] for c in cols]
-            for r in apply_ensemble(df, split_fast_path=False).collect()}
-    assert split == mono
+    got, want = _plan_vs_kernel(spark, rows)
+    assert got == want

@@ -273,3 +273,36 @@ def test_only_session_reads_environment():
         for line in _env_reads(path)
     ]
     assert not offenders, f"environment read outside session.py: {offenders}"
+
+
+# ---------------------------------------------------------------------------
+# One routing definition: route_name / route_addr pick every string-field
+# strategy. The Arrow kernel only normalizes, batches the C kernels,
+# memoizes and calls the routers, so it names no strategy; and the ensemble
+# has one plan shape. Pure source scan, no Spark.
+# ---------------------------------------------------------------------------
+
+def test_kernel_holds_no_routing():
+    import ast
+    import pathlib
+
+    path = (
+        pathlib.Path(__file__).resolve().parent.parent
+        / "payor_mdm_spark" / "functions" / "ensemble.py"
+    )
+    funcs = {
+        node.name: node
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path)))
+        if isinstance(node, ast.FunctionDef)
+    }
+    strategies = sorted(
+        node.value
+        for node in ast.walk(funcs["_string_scores_batch"])
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and node.value.startswith(("NAME_", "ADDR_", "TIN_"))
+    )
+    assert not strategies, f"_string_scores_batch names strategies: {strategies}"
+    args = funcs["apply_ensemble"].args
+    params = [a.arg for a in args.posonlyargs + args.args + args.kwonlyargs]
+    assert "split_fast_path" not in params

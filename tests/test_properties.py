@@ -96,3 +96,78 @@ def test_router_winner_is_max_of_tried(a, b):
     score, strat = route_name(a.upper().strip(), b.upper().strip())
     assert 0.0 <= score <= 1.0001
     assert strat.startswith("NAME_")
+
+
+# --- route_name against the reference's dict-of-strategies router ----------
+
+def _dict_router(a, b, abbrevs=None, jw=None, tri=None):
+    """The reference's shape (11_ensemble_udfs.sql:530-553): fill an
+    insertion-ordered dict with every strategy the branch tries, then take
+    the first max. route_name returns early per branch instead and must
+    equal this on every input."""
+    from payor_mdm_spark.config import ABBREVS
+    from payor_mdm_spark.functions.phonetic import phonetic_equal
+
+    table = ABBREVS if abbrevs is None else abbrevs
+    has_abbrev = any(t in table for t in a.split()) or any(
+        t in table for t in b.split()
+    )
+    mx = max(len(a), len(b))
+    len_ratio = min(len(a), len(b)) / mx if mx > 0 else 1.0
+    results = {}
+    if has_abbrev:
+        results["NAME_ABR"] = sim.name_abr(a, b, abbrevs)
+        results["NAME_JW"] = jw if jw is not None else sim.name_jw(a, b)
+        results["NAME_TSR"] = sim.token_sort_ratio(a, b)
+    elif len_ratio < 0.6:
+        results["NAME_TSR"] = sim.token_sort_ratio(a, b)
+        results["NAME_ABR"] = sim.name_abr(a, b, abbrevs)
+    elif mx <= 20:
+        results["NAME_JW"] = jw if jw is not None else sim.name_jw(a, b)
+        results["NAME_PHO"] = phonetic_equal(a, b)
+        results["NAME_NGR"] = tri if tri is not None else sim.trigram_cosine(a, b)
+    else:
+        results["NAME_JW"] = jw if jw is not None else sim.name_jw(a, b)
+        results["NAME_NGR"] = tri if tri is not None else sim.trigram_cosine(a, b)
+    winner = max(results, key=results.get)
+    return results[winner], winner
+
+
+_ROUTER_TOKENS = st.sampled_from(
+    ["BCBS", "UHC", "HMO", "KP", "ACME", "HEALTH", "PLAN", "OF", "TEXAS", "A",
+     "CARE", "KAISER"]
+)
+_FILLER = "QRSTUVWXYZ" * 4
+
+
+@st.composite
+def _router_inputs(draw):
+    a = " ".join(draw(st.lists(_ROUTER_TOKENS, max_size=6)))
+    how = draw(st.sampled_from(["same", "reorder", "cut", "sized", "other"]))
+    if how == "same":  # every strategy ties at 1.0
+        b = a
+    elif how == "reorder":  # TSR ties with the abbreviation expansion
+        b = " ".join(reversed(a.split()))
+    elif how == "cut":  # length ratio anywhere in [0, 1]
+        b = a[: draw(st.integers(0, len(a)))].strip()
+    elif how == "sized":  # max length 19-23, ratio straddling 0.6 (12/20)
+        a = (a + _FILLER)[: draw(st.integers(12, 23))].strip()
+        b = (a[:4] + _FILLER[::-1])[: draw(st.integers(11, 23))].strip()
+    else:
+        b = " ".join(draw(st.lists(_ROUTER_TOKENS, max_size=6)))
+    # precomputed kernel scores (or none): a small value set forces JW/NGR
+    # ties and orderings the real kernels rarely produce
+    pre = st.one_of(st.none(), st.sampled_from([0.0, 0.5, 0.8125, 1.0]))
+    abbrevs = draw(st.sampled_from([None, {"CARE": "HEALTH CARE"}]))
+    return a, b, abbrevs, draw(pre), draw(pre)
+
+
+@settings(max_examples=400, deadline=None)
+@given(_router_inputs())
+def test_route_name_equals_dict_router(inputs):
+    from payor_mdm_spark.functions.ensemble import route_name
+
+    a, b, abbrevs, jw, tri = inputs
+    assert route_name(a, b, abbrevs, jw=jw, tri=tri) == _dict_router(
+        a, b, abbrevs, jw=jw, tri=tri
+    )

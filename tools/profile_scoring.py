@@ -8,7 +8,11 @@ sink so no slice pays for parquet encoding unless stated:
   2. rehydration + native prep + ensemble UDF (full score_pairs frame);
   3. the committed write (parquet to tmpfs) of the scored frame.
 
-Usage: python tools/profile_scoring.py [--entities 30000]
+The JSON line also records the Spark core count (``cpus``: SPARK_GRAFT_CPUS,
+else the cores this process may run on), the blocking pair count and the
+median µs per pair of the score_pairs_noop slice.
+
+Usage: python tools/profile_scoring.py [--entities 30000] [--reps 2]
 """
 
 from __future__ import annotations
@@ -17,6 +21,7 @@ import argparse
 import json
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -38,7 +43,9 @@ def main() -> None:
     from payor_mdm_spark.operators.staging import stage_records
     from payor_mdm_spark.session import get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    # SPARK_GRAFT_CPUS overrides; by default use the cores this process may
+    # run on, so the session never oversubscribes the host
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
     d = tempfile.mkdtemp(prefix="prof_scoring_", dir=shm)
     extra = {"spark.local.dir": os.path.join(d, "slocal")}
@@ -66,9 +73,11 @@ def main() -> None:
     pairs.write.mode("overwrite").parquet(os.path.join(d, "pairs"))
     pairs = spark.read.parquet(os.path.join(d, "pairs"))
     blocking_s = round(time.time() - t0, 2)
+    n_pairs = pairs.count()
 
-    out = {"entities": args.entities, "gen_s": gen_s, "staged_s": staged_s,
-           "blocking_s": blocking_s, "slices": {}}
+    out = {"entities": args.entities, "cpus": cpus, "pairs": n_pairs,
+           "gen_s": gen_s, "staged_s": staged_s, "blocking_s": blocking_s,
+           "slices": {}}
 
     def timeit(name, df, write=False):
         samples = []
@@ -86,6 +95,9 @@ def main() -> None:
     timeit("rehydrate_noop", rehydrate_pairs(pairs, staged))
     scored = score_pairs(pairs, staged)
     timeit("score_pairs_noop", scored)
+    out["score_pairs_noop_us_per_pair"] = round(
+        statistics.median(out["slices"]["score_pairs_noop"]) / max(n_pairs, 1) * 1e6, 2
+    )
     timeit("score_pairs_write", scored, write=True)
     print(json.dumps(out), flush=True)
     shutil.rmtree(d, ignore_errors=True)
