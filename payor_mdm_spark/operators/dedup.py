@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from payor_mdm_spark.operators.blocking import _pairs_within_blocks, _with_signature
+from payor_mdm_spark.operators.clustering import collect_small
 from payor_mdm_spark.operators.text_analysis import word_ngrams_col
 
 
@@ -257,19 +258,33 @@ def _minhash_exact_verify(
     text bytes (every char appears in k shingles), built by an interpreted
     higher-order `transform` and shuffled through two joins, then compared
     with interpreted `array_intersect`/`array_union` per pair. Now the
-    pair table attaches the raw TEXTS (the lightest possible proxy) and a
-    single Arrow kernel computes |A∩B|/|A∪B| over C-native frozensets,
-    memoizing each distinct text's shingle set per Arrow batch. Semantics are
-    bit-identical to the expression form, including the edges: NULL text
-    -> {NULL} (two NULL docs share jaccard 1.0), short text (< k chars)
-    -> the whole string as its only shingle; the division is the same
-    exact-int IEEE divide. Pinned by the dedup_minhash_lsh /
+    pair table attaches the raw TEXTS (the lightest possible proxy) and one
+    kernel, ``_verify_batch``, computes |A∩B|/|A∪B| over C-native
+    frozensets, memoizing each distinct text's shingle set per batch.
+    Semantics are bit-identical to the expression form, including the
+    edges: NULL text -> {NULL} (two NULL docs share jaccard 1.0), short
+    text (< k chars) -> the whole string as its only shingle; the division
+    is the same exact-int IEEE divide. Pinned by the dedup_minhash_lsh /
     dedup_minhash_incremental DuckDB oracles.
 
-    ``n_pairs``: row count of ``survivors`` when the caller has it
-    materialized — when small, the pair side is broadcast through every
-    join (semi + both text attaches) so the corpus scan streams map-side."""
+    Three shapes, one kernel:
+
+    * in-process — ``n_pairs`` (the row count of ``survivors``, when the
+      caller has it materialized) is small, so the pair side is broadcast
+      through both text attaches and the corpus scan streams map-side;
+      ``clustering.collect_small`` materializes the pairs with both texts
+      once, and when they fit under ``LOCAL_COLLECT_BYTES`` the kernel
+      runs on the driver. No Python worker starts (the first one in a JVM
+      costs seconds, far more than verifying ~100 pairs), and the result
+      is an Arrow local relation;
+    * broadcast — the same materialized pairs when they do not fit:
+      ``mapInPandas`` runs the kernel over them;
+    * semi-join — the scale shape: the corpus is first reduced to the docs
+      any survivor touches."""
     small = n_pairs is not None and n_pairs <= PAIR_BROADCAST_ROWS
+    id_type = survivors.schema["id_a"].dataType.simpleString()
+    schema = f"id_a {id_type}, id_b {id_type}, jaccard double"
+    k, thr = shingle_k, jaccard_threshold
     # upper() stays JVM-side so case semantics match _shingles exactly
     # (same rule as blocking._md5_signature_batches)
     if small:
@@ -283,16 +298,38 @@ def _minhash_exact_verify(
         b = docs.select(
             F.col(id_col).alias("id_b"), F.upper(F.col(text_col)).alias("_tb")
         )
-        # the probe side inherits the corpus scan's split count, which on a
-        # small/compact parquet is 1-2 splits — the broadcast probes AND the
-        # Jaccard kernel would run near-serially; spread when below the
-        # core count (skips itself at scale, same guard as the hash spread)
+        # the pairs with both texts, materialized once (the driver already
+        # holds pairs_a for the broadcast): when they fit under the collect
+        # cap, verify them in-process, so no Python worker boots and the
+        # result is an Arrow local relation; else mapInPandas reads them
+        local, joined = collect_small(
+            b.join(F.broadcast(a.join(F.broadcast(survivors), "id_a")), "id_b")
+            .select("id_a", "id_b", "_ta", "_tb")
+        )
+        if local is not None:
+            import pyarrow as pa
+
+            cols = _verify_batch(
+                *(local[c].to_pylist() for c in ("id_a", "id_b", "_ta", "_tb")),
+                k, thr,
+            )
+            t = local.schema.field("id_a").type
+            out = pa.table(
+                dict(zip(("id_a", "id_b", "jaccard"), cols)),
+                schema=pa.schema(
+                    [("id_a", t), ("id_b", t), ("jaccard", pa.float64())]
+                ),
+            )
+            return docs.sparkSession.createDataFrame(out, schema)
+        # the pairs inherit the corpus scan's split count, which on a
+        # small/compact parquet is 1-2 splits — the Jaccard kernel would
+        # run near-serially; spread when below the core count (skips itself
+        # at scale, same guard as the hash spread)
         from payor_mdm_spark.operators.blocking import _scan_splits_below
 
         parallelism = docs.sparkSession.sparkContext.defaultParallelism
         if _scan_splits_below(b, parallelism):
-            b = b.repartition(parallelism)
-        joined = b.join(F.broadcast(a.join(F.broadcast(survivors), "id_a")), "id_b")
+            joined = joined.repartition(parallelism)
     else:
         # scale shape: reduce the corpus to the docs any survivor touches
         # (ONE full-corpus shuffle) before attaching texts twice
@@ -309,50 +346,51 @@ def _minhash_exact_verify(
         a = txt.select(F.col(id_col).alias("id_a"), F.col("_t").alias("_ta"))
         b = txt.select(F.col(id_col).alias("id_b"), F.col("_t").alias("_tb"))
         joined = survivors.join(a, "id_a").join(b, "id_b")
-    id_type = survivors.schema["id_a"].dataType.simpleString()
-    schema = f"id_a {id_type}, id_b {id_type}, jaccard double"
-    k = shingle_k
-    thr = jaccard_threshold
 
     def gen(batches):
         import pandas as pd
 
-        def sset(u, memo):
-            s = memo.get(u)
-            if s is None:
-                if u is None:
-                    # _shingles(NULL) -> array(upper(NULL)) -> [NULL]
-                    s = frozenset((None,))
-                else:
-                    # input is pre-uppercased JVM-side
-                    n = len(u)
-                    if n >= k:
-                        s = frozenset(u[i : i + k] for i in range(n - k + 1))
-                    else:
-                        s = frozenset((u,))
-                memo[u] = s
-            return s
-
         for pdf in batches:
-            # per-batch memo, like the ensemble kernel's: it dies with the
-            # Arrow batch, so a task holds at most one batch's shingle sets
-            memo: dict = {}
-            ia = pdf["id_a"].tolist()
-            ib = pdf["id_b"].tolist()
-            ta = pdf["_ta"].tolist()
-            tb = pdf["_tb"].tolist()
-            oa, ob, oj = [], [], []
-            for i in range(len(ia)):
-                sa, sb = sset(ta[i], memo), sset(tb[i], memo)
-                un = len(sa | sb)
-                j = len(sa & sb) / un if un > 0 else 0.0
-                if j >= thr:
-                    oa.append(ia[i])
-                    ob.append(ib[i])
-                    oj.append(j)
+            oa, ob, oj = _verify_batch(
+                pdf["id_a"].tolist(), pdf["id_b"].tolist(),
+                pdf["_ta"].tolist(), pdf["_tb"].tolist(), k, thr,
+            )
             yield pd.DataFrame({"id_a": oa, "id_b": ob, "jaccard": oj})
 
     return joined.select("id_a", "id_b", "_ta", "_tb").mapInPandas(gen, schema)
+
+
+def _verify_batch(ia: list, ib: list, ta: list, tb: list, k: int,
+                  thr: float) -> tuple[list, list, list]:
+    """The exact-Jaccard kernel over one batch of pairs with their
+    upper-cased texts: the (id_a, id_b, jaccard) columns of the pairs at
+    or above ``thr``. The shingle-set memo is per batch, so a task holds
+    at most one batch's sets."""
+    memo: dict = {}
+
+    def sset(u):
+        s = memo.get(u)
+        if s is None:
+            if u is None:
+                # _shingles(NULL) -> array(upper(NULL)) -> [NULL]
+                s = frozenset((None,))
+            elif len(u) >= k:
+                s = frozenset(u[i : i + k] for i in range(len(u) - k + 1))
+            else:
+                s = frozenset((u,))
+            memo[u] = s
+        return s
+
+    oa, ob, oj = [], [], []
+    for i in range(len(ia)):
+        sa, sb = sset(ta[i]), sset(tb[i])
+        un = len(sa | sb)
+        j = len(sa & sb) / un if un > 0 else 0.0
+        if j >= thr:
+            oa.append(ia[i])
+            ob.append(ib[i])
+            oj.append(j)
+    return oa, ob, oj
 
 
 SIMHASH_BITS = 60  # md5_60bit token hashes -> 60 usable bits, 4 bands x 15
@@ -505,9 +543,10 @@ def dedup_clusters(
     """Near-dup pairs -> transitive dup clusters -> canonical keeper.
 
     The corpus-dedup closer: pairs from ANY detection pass (exact, MinHash,
-    SimHash, embedding-cosine) are clustered with the same distributed
+    SimHash, embedding-cosine) are clustered with the same
     connected-components operator as entity resolution
-    (operators/clustering.propagate_labels — hash-min + pointer jumping,
+    (operators/clustering.propagate_labels: union-find on the driver when
+    the pairs fit under its collect cap, else hash-min + pointer jumping,
     so million-doc dup chains converge in O(log n) rounds), and each
     cluster keeps its min-id member. Output: [id_col, cluster_root,
     is_keeper] for every document (singletons are their own root).

@@ -1,18 +1,33 @@
 """Clustering topology micro-fixtures (FIXTURES.md §6): the cases the
 reference's fixed-2-pass SQL variant gets wrong (match_groups.sql:43-44) —
-our label propagation must reach fixpoint beyond 2 hops."""
+label propagation must reach fixpoint beyond 2 hops. Every topology runs
+on both paths of propagate_labels: driver union-find (the default at these
+sizes) and the distributed hash-min loop (forced by a tiny collect cap)."""
 
-from pyspark.sql import functions as F
+import pytest
 
+from payor_mdm_spark.operators import clustering
 from payor_mdm_spark.operators.clustering import build_match_groups, propagate_labels
 
 
-def _components(spark, edges, nodes):
+def _frames(spark, edges, nodes):
     e = spark.createDataFrame(
         edges, "source_record_id_a string, source_record_id_b string"
     )
     n = spark.createDataFrame([(x,) for x in nodes], "source_record_id string")
-    rows = propagate_labels(e, n).collect()
+    return e, n
+
+
+def _components(spark, edges, nodes):
+    """Components on the driver path, after checking that the loop path
+    emits the same rows, both straight (cap 0) and from the materialized
+    edges after the sizing declined them (cap 1)."""
+    e, n = _frames(spark, edges, nodes)
+    rows = sorted(propagate_labels(e, n).collect())
+    for cap in (0, 1):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(clustering, "LOCAL_COLLECT_BYTES", cap)
+            assert sorted(propagate_labels(e, n).collect()) == rows
     return {r.source_record_id: r.component for r in rows}
 
 
@@ -55,6 +70,16 @@ def test_long_chain_beyond_two_passes(spark):
     assert set(comp.values()) == {"n0"}
 
 
+def test_loop_raises_when_not_converged(spark, monkeypatch):
+    # one round cannot settle a 9-node chain: the loop must say so rather
+    # than return labels that are not yet components
+    monkeypatch.setattr(clustering, "LOCAL_COLLECT_BYTES", 0)
+    nodes = [f"n{i}" for i in range(9)]
+    e, n = _frames(spark, [(f"n{i}", f"n{i+1}") for i in range(8)], nodes)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        propagate_labels(e, n, max_iterations=1)
+
+
 def test_build_match_groups_semantics(spark):
     candidates = spark.createDataFrame(
         [
@@ -86,15 +111,19 @@ def test_build_match_groups_semantics(spark):
     assert by_id["a"].match_group_id == hashlib.md5(b"a").hexdigest()
 
 
-def test_store_backed_checkpointing_identical_components(spark, tmp_path):
+def test_store_backed_checkpointing_identical_components(
+    spark, tmp_path, monkeypatch
+):
     """VERDICT r02 item 5: the reliable (CheckpointStore-committed)
     lineage-truncation path must produce exactly the local-checkpoint
     components, and must actually commit labels every store_every rounds
-    (both alternating tables written for a long enough chain)."""
+    (both alternating tables written for a long enough chain). The store
+    applies only to the loop, so the loop path is forced."""
     import os
 
     from payor_mdm_spark.sources.catalog import CheckpointStore
 
+    monkeypatch.setattr(clustering, "LOCAL_COLLECT_BYTES", 0)
     nodes = [f"n{i:03d}" for i in range(40)]
     edges = [(f"n{i:03d}", f"n{i+1:03d}") for i in range(39)]
     e = spark.createDataFrame(
@@ -113,3 +142,66 @@ def test_store_backed_checkpointing_identical_components(spark, tmp_path):
     assert set(local.values()) == {"n000"}
     written = {d for d in os.listdir(tmp_path / "cc") if d.startswith("cc_labels")}
     assert written == {"cc_labels_0", "cc_labels_1"}  # >= 4 rounds -> both slots
+
+
+def test_collect_small_sizes_before_collecting(spark, monkeypatch):
+    # two long columns and one string column: 8 bytes a value plus the
+    # strings' UTF-8 bytes ("é" is two) -> 100 * 24 + 100 * 3 bytes
+    df = spark.createDataFrame(
+        [(i, i + 1, "aé") for i in range(100)], "a long, b long, s string"
+    )
+    monkeypatch.setattr(clustering, "LOCAL_COLLECT_BYTES", 2700)
+    table, frame = clustering.collect_small(df)
+    assert table.num_rows == 100 and table.column("s")[0].as_py() == "aé"
+    # one byte short: nothing is pulled, and the caller gets the
+    # materialized frame for its distributed path
+    monkeypatch.setattr(clustering, "LOCAL_COLLECT_BYTES", 2699)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    table, frame = clustering.collect_small(df)
+    assert table is None
+    assert len(set(tracker.getJobIdsForGroup(None)) - before) == 1
+    assert "LogicalRDD" in frame._jdf.queryExecution().optimizedPlan().toString()
+    assert sorted(frame.collect()) == sorted(df.collect())
+    monkeypatch.setattr(clustering, "LOCAL_COLLECT_BYTES", 0)
+    table, frame = clustering.collect_small(df)
+    assert table is None and frame is df
+
+
+def test_min_root_components_at_scale():
+    """The driver path's union-find on ~200k edges (a long chain, random
+    edges, self-loops, NULL endpoints): one root per component, and that
+    root is the component's minimum by a BFS reference."""
+    import random
+    import time
+    from collections import defaultdict, deque
+
+    rng = random.Random(7)
+    n = 100_000
+    src = list(range(50_000 - 1)) + [rng.randrange(50_000, n) for _ in range(150_000)]
+    dst = list(range(1, 50_000)) + [rng.randrange(50_000, n) for _ in range(150_000)]
+    src += [5, None, 60_000]
+    dst += [5, 7, None]
+    t0 = time.perf_counter()
+    comp = clustering._min_root_components(src, dst)
+    assert time.perf_counter() - t0 < 30
+
+    adj = defaultdict(list)
+    for u, v in zip(src, dst):
+        if u is not None and v is not None:
+            adj[u].append(v)
+            adj[v].append(u)
+    want = {None: None}
+    for start in sorted(x for x in set(src) | set(dst) if x is not None):
+        if start in want:
+            continue
+        seen, queue = {start}, deque([start])
+        while queue:
+            for y in adj[queue.popleft()]:
+                if y not in seen:
+                    seen.add(y)
+                    queue.append(y)
+        for x in seen:
+            want[x] = start  # visited in ascending order: start is the min
+    assert comp == want
+    assert set(comp[x] for x in range(50_000)) == {0}

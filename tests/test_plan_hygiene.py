@@ -125,6 +125,22 @@ def test_candidate_pairs_job_budget(spark, er_stage_frames):
     assert len(jobs) <= 12, f"candidate_pairs ran {len(jobs)} jobs"
 
 
+def test_match_groups_job_budget(spark, er_stage_frames):
+    """A small match-edge set is solved on the driver: one sizing
+    checkpoint and one collect replace the hash-min loop's two shuffles
+    and a count per round."""
+    from payor_mdm_spark.operators.clustering import build_match_groups
+
+    candidates = er_stage_frames["match_candidates"].localCheckpoint(eager=True)
+    staged = er_stage_frames["staged"]
+    staged.count()  # fill the cache outside the counted region
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    build_match_groups(candidates, staged).collect()
+    jobs = set(tracker.getJobIdsForGroup(None)) - before
+    assert len(jobs) <= 12, f"build_match_groups ran {len(jobs)} jobs"
+
+
 def test_docs_pipeline_stage_plans_clean(spark):
     from pyspark.sql import functions as F
 
@@ -306,3 +322,66 @@ def test_kernel_holds_no_routing():
     args = funcs["apply_ensemble"].args
     params = [a.arg for a in args.posonlyargs + args.args + args.kwonlyargs]
     assert "split_fast_path" not in params
+
+
+# ---------------------------------------------------------------------------
+# A small docs run starts no Python worker: the MinHash exact verify and the
+# connected components finish on the driver, so no committed DOC_STAGES
+# frame, and no frame checkpointed while building one, plans a Python
+# operator, and no Python RDD is built.
+# ---------------------------------------------------------------------------
+
+PYTHON_PLAN_NODES = (
+    "MapInPandas", "MapInArrow", "ArrowEvalPython", "BatchEvalPython",
+    "FlatMapGroupsInPandas", "PythonUDF",
+)
+
+
+def test_small_docs_run_plans_no_python(spark, monkeypatch):
+    from pyspark.core.rdd import PipelinedRDD
+
+    from payor_mdm_spark.plans.docs_pipeline import DOC_STAGES, run_docs_pipeline
+
+    class CaptureStore:
+        def __init__(self):
+            self.frames = {}
+
+        def write(self, name, df):
+            self.frames[name] = df
+
+        def read(self, name):
+            return self.frames[name]
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    checkpointed = []
+    frame_cls = type(docs)
+    real_checkpoint = frame_cls.localCheckpoint
+
+    def recording_checkpoint(self, *args, **kwargs):
+        checkpointed.append(plan(self))
+        return real_checkpoint(self, *args, **kwargs)
+
+    python_rdds = []
+    real_init = PipelinedRDD.__init__
+
+    def recording_init(self, *args, **kwargs):
+        python_rdds.append(type(self).__name__)
+        real_init(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording_checkpoint)
+    monkeypatch.setattr(PipelinedRDD, "__init__", recording_init)
+    store = CaptureStore()
+    run_docs_pipeline(spark, docs, store, collect_metrics=False)
+
+    assert sorted(store.frames) == sorted(DOC_STAGES)
+    plans = [(name, plan(store.frames[name])) for name in DOC_STAGES]
+    plans += [(f"checkpoint {i}", p) for i, p in enumerate(checkpointed)]
+    offenders = [
+        (name, node) for name, p in plans
+        for node in PYTHON_PLAN_NODES if node in p
+    ]
+    assert not offenders, f"Python operators in a small docs run: {offenders}"
+    assert not python_rdds, f"a small docs run built Python RDDs: {python_rdds}"

@@ -171,3 +171,68 @@ def test_route_name_equals_dict_router(inputs):
     assert route_name(a, b, abbrevs, jw=jw, tri=tri) == _dict_router(
         a, b, abbrevs, jw=jw, tri=tri
     )
+
+
+# ---------------------------------------------------------------------------
+# Connected components: the driver union-find path and the distributed
+# hash-min loop of propagate_labels emit identical rows on random graphs.
+# ---------------------------------------------------------------------------
+
+# str ids mix lengths, cases and multi-byte characters, so min() has to
+# agree with Spark's UTF-8 byte order, not just ASCII order
+_CC_IDS = {
+    "long": st.integers(-40, 40),
+    "string": st.text(
+        alphabet=st.sampled_from("aAbz09 é中😀"), min_size=0, max_size=3
+    ),
+}
+
+
+@st.composite
+def _cc_graphs(draw):
+    from itertools import combinations
+
+    id_type = draw(st.sampled_from(sorted(_CC_IDS)))
+    pool = draw(st.lists(_CC_IDS[id_type], min_size=1, max_size=14, unique=True))
+    node = st.sampled_from(pool)
+    edges = []
+    for shape in draw(st.lists(
+        st.sampled_from(["chain", "star", "clique", "random"]), max_size=4
+    )):
+        m = draw(st.lists(node, min_size=1, max_size=7, unique=True))
+        if shape == "chain":
+            edges += list(zip(m, m[1:]))
+        elif shape == "star":
+            edges += [(m[0], x) for x in m[1:]]
+        elif shape == "clique":
+            edges += list(combinations(m, 2))
+        else:  # self-loops and NULL endpoints come from here
+            end = st.one_of(node, st.none())
+            edges += draw(st.lists(st.tuples(end, end), max_size=6))
+    if edges:  # duplicate and reversed duplicate edges
+        again = draw(st.lists(st.sampled_from(edges), max_size=4))
+        edges += again + [(b, a) for a, b in again[::2]]
+    # isolated, duplicate and NULL nodes; edge endpoints need not be nodes
+    nodes = draw(st.lists(st.one_of(node, st.none()), max_size=16))
+    return id_type, edges, nodes
+
+
+@settings(max_examples=25, deadline=None)
+@given(_cc_graphs())
+def test_propagate_labels_driver_equals_loop(spark, graph):
+    from payor_mdm_spark.operators import clustering
+
+    id_type, edges, nodes = graph
+    e = spark.createDataFrame(
+        edges, f"source_record_id_a {id_type}, source_record_id_b {id_type}"
+    )
+    n = spark.createDataFrame([(x,) for x in nodes], f"source_record_id {id_type}")
+
+    def rows(df):
+        return df.schema.simpleString(), sorted(map(tuple, df.collect()), key=repr)
+
+    driver = rows(clustering.propagate_labels(e, n))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(clustering, "LOCAL_COLLECT_BYTES", 0)
+        loop = rows(clustering.propagate_labels(e, n))
+    assert driver == loop

@@ -1116,51 +1116,97 @@ class TestNgramsFromProjectedTokens:
 
 
 class TestMinhashExactVerifyKernel:
-    """Pins the r06 Arrow-kernel exact verify against the expression form's
-    edge semantics: NULL text shingles to {NULL} (so a NULL-NULL pair is an
+    """Pins the exact-verify kernel against the expression form's edge
+    semantics: NULL text shingles to {NULL} (so a NULL-NULL pair is an
     exact match at jaccard 1.0, and NULL-vs-text never matches), sub-k text
-    is its own single shingle, and both the broadcast and the big-survivor
-    (semi-join) code paths agree."""
+    is its own single shingle, and all three shapes agree: in-process on
+    the driver (small survivor sets), the in-Spark broadcast shape and the
+    big-survivor (semi-join) shape."""
 
-    def _world(self, spark):
+    WANT = [(1, 2, 1.0), (3, 4, 1.0), (5, 6, 1.0)]
+
+    def _world(self, spark, id_type="long"):
+        cast = int if id_type == "long" else (lambda i: f"d{i}")
         docs = spark.createDataFrame(
             [
-                (1, "abcdefghij"),
-                (2, "Abcdefghij"),   # case-folds equal to doc 1
-                (3, None),
-                (4, None),
-                (5, "ab"),           # below shingle_k: whole-string shingle
-                (6, "AB"),
+                (cast(1), "abcdefghij"),
+                (cast(2), "Abcdefghij"),   # case-folds equal to doc 1
+                (cast(3), None),
+                (cast(4), None),
+                (cast(5), "ab"),           # below shingle_k: whole-string shingle
+                (cast(6), "AB"),
             ],
-            "doc_id long, text string",
+            f"doc_id {id_type}, text string",
         )
         surv = spark.createDataFrame(
-            [(1, 2), (3, 4), (1, 5), (1, 3), (5, 6)],
-            "id_a long, id_b long",
+            [(cast(a), cast(b)) for a, b in [(1, 2), (3, 4), (1, 5), (1, 3), (5, 6)]],
+            f"id_a {id_type}, id_b {id_type}",
         )
         return docs, surv
 
-    def _run(self, spark, n_pairs):
+    def _verify(self, spark, n_pairs, id_type="long", empty=False):
         from payor_mdm_spark.operators.dedup import _minhash_exact_verify
 
-        docs, surv = self._world(spark)
-        out = _minhash_exact_verify(
+        docs, surv = self._world(spark, id_type)
+        if empty:
+            surv = surv.limit(0)
+        return _minhash_exact_verify(
             surv, docs, "doc_id", "text", 5, 0.8, n_pairs=n_pairs
         )
-        return sorted(tuple(r) for r in out.collect())
 
     def test_edge_semantics_broadcast_path(self, spark):
         # upper() folding: 1-2 identical; NULL-NULL: 3-4 at 1.0; sub-k
         # case-folded: 5-6 at 1.0; NULL-vs-text (1,3) and text-vs-subk
-        # (1,5) drop below threshold
-        assert self._run(spark, n_pairs=5) == [
-            (1, 2, 1.0), (3, 4, 1.0), (5, 6, 1.0)
-        ]
+        # (1,5) drop below threshold. A survivor set this small is
+        # verified on the driver and comes back as a local relation.
+        out = self._verify(spark, n_pairs=5)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.startswith("LocalRelation"), plan
+        assert sorted(tuple(r) for r in out.collect()) == self.WANT
+
+    def test_edge_semantics_broadcast_path_in_spark(self, spark, monkeypatch):
+        # a zero collect cap keeps the broadcast shape in Spark
+        from payor_mdm_spark.operators import clustering
+
+        monkeypatch.setattr(clustering, "LOCAL_COLLECT_BYTES", 0)
+        out = self._verify(spark, n_pairs=5)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "MapInPandas" in plan, plan
+        assert sorted(tuple(r) for r in out.collect()) == self.WANT
 
     def test_edge_semantics_semi_join_path(self, spark):
         # force the big-survivor branch (semi-join + shuffle attaches)
-        assert self._run(spark, n_pairs=10_000_000) == [
-            (1, 2, 1.0), (3, 4, 1.0), (5, 6, 1.0)
+        out = self._verify(spark, n_pairs=10_000_000)
+        assert sorted(tuple(r) for r in out.collect()) == self.WANT
+
+    def test_edge_semantics_declined_collect(self, spark, monkeypatch):
+        # a one-byte cap sizes the pairs, declines them, and mapInPandas
+        # reads the materialized pairs instead of scanning the corpus again
+        from payor_mdm_spark.operators import clustering
+
+        monkeypatch.setattr(clustering, "LOCAL_COLLECT_BYTES", 1)
+        out = self._verify(spark, n_pairs=5)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "MapInPandas" in plan and "LogicalRDD" in plan, plan
+        assert "Join" not in plan, plan
+        assert sorted(tuple(r) for r in out.collect()) == self.WANT
+
+    def test_empty_survivors_typed_local_relation(self, spark):
+        out = self._verify(spark, n_pairs=0, empty=True)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.startswith("LocalRelation"), plan
+        assert out.schema.simpleString() == (
+            "struct<id_a:bigint,id_b:bigint,jaccard:double>"
+        )
+        assert out.collect() == []
+
+    def test_string_doc_ids(self, spark):
+        out = self._verify(spark, n_pairs=5, id_type="string")
+        assert out.schema.simpleString() == (
+            "struct<id_a:string,id_b:string,jaccard:double>"
+        )
+        assert sorted(tuple(r) for r in out.collect()) == [
+            (f"d{a}", f"d{b}", j) for a, b, j in self.WANT
         ]
 
 
