@@ -4,9 +4,12 @@ Re-expresses the reference's ``ENSEMBLE_MATCH_SCORE`` scalar Python UDF
 (/root/reference/snowflake/11_ensemble_udfs.sql:411-645) — a per-field,
 data-characteristic strategy router with a weighted composite — as:
 
-* ONE Arrow-vectorized pandas UDF for the string-similarity fields (the
-  name and address routers), returning a typed StructType so Catalyst can
-  prune struct fields; and
+* ONE Arrow batch kernel for the string-similarity fields (the name and
+  address routers), returning a typed StructType so Catalyst can prune
+  struct fields. It runs on the driver over one collected Arrow table when
+  the pair frame fits under LOCAL_SCORE_BYTES (a small run then starts no
+  Python worker, whose boot would cost more than the pairs), else as an
+  Arrow-vectorized pandas UDF; and
 * native column expressions for everything cheap (tax exact/transpose,
   phone / cms strategies, winner-take-max, composite weighting +
   renormalization), which stay inside WholeStageCodegen.
@@ -41,6 +44,7 @@ from pyspark.sql.types import (
 from payor_mdm_spark.config import ABBREVS, FIELD_WEIGHTS
 from payor_mdm_spark.functions import similarity as sim
 from payor_mdm_spark.functions.phonetic import phonetic_equal
+from payor_mdm_spark.operators.clustering import collect_small
 
 STRING_SCORES_SCHEMA = StructType(
     [
@@ -50,6 +54,18 @@ STRING_SCORES_SCHEMA = StructType(
         StructField("addr_strategy", StringType()),
     ]
 )
+
+# the largest rehydrated pair frame (Arrow bytes as collect_small sizes
+# it, ~635 B a pair, so ~1.6k pairs) that apply_ensemble scores on the
+# driver. score_pairs plus a noop write, driver kernel against the UDF
+# (cap 0), first rep cold then the median of 5 warm reps, one process per
+# arm and size on a 4-core host: 1,343 pairs cold 1.9 s vs 3.5 s, warm
+# 1.00 vs 1.13 s; 3,002 pairs 1.9 vs 2.9, warm 0.99 vs 1.16; 8,440 pairs
+# 2.5 vs 3.6, warm 1.22 vs 1.32; 19,510 pairs 3.6 vs 2.8, warm 1.95 vs
+# 1.24. The one-threaded kernel falls behind warm workers somewhere past
+# 3k pairs, so the cap stays under that; it covers an incremental delta
+# and a 100-entity full run (1,343 pairs).
+LOCAL_SCORE_BYTES = 1 << 20
 
 
 def _first_max(*candidates: tuple[float, str]) -> tuple[float, str]:
@@ -322,7 +338,7 @@ def _digits(col: Column) -> Column:
 # Rows whose string fields are decidable without the Python router (either
 # side null/empty, or identical values whose winning strategy provably
 # scores 1.0) are scored with the column expressions below and send NULL
-# inputs to the Arrow UDF; only rows that genuinely need route_name /
+# inputs to the string kernel; only rows that genuinely need route_name /
 # route_addr pay the Python cost. Each expression is a bit-exact clone of
 # what the routers (and score_tax) return for those rows — equivalence is
 # pinned by tests/test_ensemble_spark.py.
@@ -354,7 +370,7 @@ def _fastpath_clean(u: Column) -> Column:
     Python's strip() removes them), no control chars (Python splits on
     \\x1c-\\x1f, Java does not), and at least one non-whitespace char
     (Python treats whitespace-only as empty -> router, not fast path).
-    Anything exotic routes to the UDF, which is the ground truth — the
+    Anything exotic routes to the kernel, which is the ground truth — the
     guard only has to be SOUND, not complete."""
     return (
         ~u.rlike(r"(?U)^\s|\s$")
@@ -507,15 +523,21 @@ def apply_ensemble(
     DET/FUZZY split in ONE plan (SURVEY §4, VERDICT r01 item 5): tax, phone
     and cms are scored natively for every row. Rows whose name AND address
     are fast-path decidable (null/empty or provably-1.0 identical) take
-    the native name/address values and send NULL inputs to the Arrow
-    string-router UDF (a null column crosses the boundary as a validity
-    bitmap and the kernel skips it); every other row is scored by the UDF.
-    Masking rather than a filter+union keeps the (join-heavy) upstream
-    lineage evaluated once. Results are bit-identical to routing every
-    row through route_name / route_addr / score_tax (pinned by
-    tests/test_ensemble_spark.py).
+    the native name/address values and send NULL inputs to the string
+    router (the kernel skips them); every other row is routed. Masking
+    rather than a filter+union keeps the (join-heavy) upstream lineage
+    evaluated once.
+
+    The frame, with that mask as a column, is evaluated once by
+    ``clustering.collect_small``. When it fits under LOCAL_SCORE_BYTES
+    the kernel runs on the driver over the collected Arrow table and the
+    scores go back as an Arrow local relation, so no Python worker
+    starts; above the cap the Arrow pandas UDF runs the same kernel over
+    the materialized frame. One native tail then scores tax, phone, cms
+    and the composite on either. Results are bit-identical to routing
+    every row through route_name / route_addr / score_tax on both paths
+    (pinned by tests/test_ensemble_spark.py).
     """
-    udf = make_string_scores_udf(abbrevs)
     tax_s, tax_strat = tax_score_cols(
         F.col("exact_key_1_a"), F.col("exact_key_1_b")
     )
@@ -525,20 +547,44 @@ def apply_ensemble(
     addr_dec, addr_s_fast, addr_strat_fast = addr_fast_path(
         F.col("addr_a"), F.col("addr_b")
     )
-    fast_cond = name_dec & addr_dec
+    local, pairs = collect_small(
+        pairs.withColumn("_fast", name_dec & addr_dec), LOCAL_SCORE_BYTES
+    )
+    fast_cond = F.col("_fast")
+    kernel_in = ("name_a", "name_b", "addr_a", "addr_b")
+    if local is not None:
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-    def _mask(c: Column) -> Column:
-        return F.when(~fast_cond, c)
+        # fast rows send NULL inputs, as F.when(~fast_cond, c) does below
+        routed = pc.invert(local["_fast"])
+        out = _string_scores_batch(
+            *(pc.if_else(routed, local[c], None).to_pandas() for c in kernel_in),
+            abbrevs,
+        )
+        # pandas -> Arrow as at the UDF boundary: NaN becomes NULL
+        scores = pa.RecordBatch.from_pandas(
+            out, schema=to_arrow_schema(STRING_SCORES_SCHEMA),
+            preserve_index=False,
+        ).to_struct_array()
+        # one partition: a local relation otherwise scans as up to one
+        # partition per core, and the scored table would commit that many
+        # more files
+        df = pairs.sparkSession.createDataFrame(
+            local.append_column("_str", scores),
+            StructType(
+                pairs.schema.fields + [StructField("_str", STRING_SCORES_SCHEMA)]
+            ),
+        ).coalesce(1)
+    else:
+        udf = make_string_scores_udf(abbrevs)
+        df = pairs.withColumn(
+            "_str", udf(*(F.when(~fast_cond, F.col(c)) for c in kernel_in))
+        )
 
     df = (
-        pairs.withColumn(
-            "_str",
-            udf(
-                _mask(F.col("name_a")), _mask(F.col("name_b")),
-                _mask(F.col("addr_a")), _mask(F.col("addr_b")),
-            ),
-        )
-        .withColumn(
+        df.withColumn(
             "score_name",
             F.when(fast_cond, name_s_fast).otherwise(F.col("_str.name_score")),
         )
@@ -554,7 +600,7 @@ def apply_ensemble(
             "winning_addr_strategy",
             F.when(fast_cond, addr_strat_fast).otherwise(F.col("_str.addr_strategy")),
         )
-        .drop("_str")
+        .drop("_str", "_fast")
     )
 
     phone_s, phone_strat = phone_score_cols(F.col("phone_a"), F.col("phone_b"))

@@ -47,9 +47,9 @@ Group semantics mirror the proc:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, StringType
+from pyspark.sql.types import ArrayType, BinaryType, StringType
 from pyspark.sql.window import Window
 
 _ID = "source_record_id"
@@ -63,34 +63,51 @@ _ID = "source_record_id"
 LOCAL_COLLECT_BYTES = 32 << 20
 
 
-def collect_small(df: DataFrame):
+def collect_small(df: DataFrame, cap: int):
     """Evaluate ``df`` once and size it on the way -> (table, frame).
 
     ``df`` is eagerly localCheckpoint'ed while an observed aggregate
-    counts its rows and the bytes of its string columns (no extra job, no
-    shuffle). When that fits under LOCAL_COLLECT_BYTES, ``table`` is the
+    counts its rows and the bytes of its variable-width columns (no extra
+    job, no shuffle). When that fits under ``cap`` bytes, ``table`` is the
     checkpoint pulled as one pyarrow Table; otherwise it is None, no row
     has left the executors, and the caller's distributed path reads
     ``frame``, the checkpoint, instead of evaluating ``df`` again. A cap
-    of 0 returns (None, df) with no job."""
-    if LOCAL_COLLECT_BYTES <= 0:
+    of 0 returns (None, df) with no job. Each caller passes its own cap
+    (LOCAL_COLLECT_BYTES here)."""
+    if cap <= 0:
         return None, df
-    var = [f.name for f in df.schema.fields
-           if isinstance(f.dataType, (StringType, BinaryType))]
+    var = [b for b in map(_var_bytes, df.schema.fields) if b is not None]
     size = Observation()
     frame = df.observe(
         size, F.count(F.lit(1)).alias("rows"),
-        *(F.sum(F.octet_length(c)).alias(f"b{i}") for i, c in enumerate(var)),
+        *(F.sum(b).alias(f"b{i}") for i, b in enumerate(var)),
     ).localCheckpoint(eager=True)
     got = size.get
     # Arrow size: 8 bytes per value (a fixed-width id or score, or a
-    # string's offset) plus the strings' UTF-8 bytes
+    # string's or list's offset) plus the variable-width bytes
     nbytes = got["rows"] * 8 * len(df.columns) + sum(
         got[f"b{i}"] or 0 for i in range(len(var))
     )
-    if nbytes > LOCAL_COLLECT_BYTES:
+    if nbytes > cap:
         return None, frame
     return frame.toArrow(), frame
+
+
+def _var_bytes(field) -> Column | None:
+    """The Arrow bytes a row's value of ``field`` holds beyond its 8-byte
+    slot: a string's UTF-8 bytes, an array's elements at 8 bytes each plus
+    their UTF-8 bytes when they are strings; None for fixed-width types."""
+    t, c = field.dataType, F.col(field.name)
+    if isinstance(t, (StringType, BinaryType)):
+        return F.octet_length(c)
+    if isinstance(t, ArrayType):
+        text = isinstance(t.elementType, (StringType, BinaryType))
+
+        def element(x: Column) -> Column:
+            return 8 + F.coalesce(F.octet_length(x), F.lit(0)) if text else F.lit(8)
+
+        return F.aggregate(c, F.lit(0).cast("long"), lambda acc, x: acc + element(x))
+    return None
 
 
 def truncate_lineage(
@@ -233,7 +250,7 @@ def propagate_labels(
     )
     local, edges = collect_small(edges.select(
         a.cast(id_type).alias(f"{_ID}_a"), b.cast(id_type).alias(f"{_ID}_b")
-    ))
+    ), LOCAL_COLLECT_BYTES)
     if local is not None:
         import pyarrow as pa
 

@@ -7,8 +7,11 @@ by deterministic rules (DET-1 exact-key, DET-2 cms-analog, DET-3 name+state;
 pairs, the weighted composite otherwise (:76-79).
 
 Spark-first performance choices (SURVEY §4):
-* scoring adds no shuffle of its own: the pandas UDF runs over the
-  partitions the rehydration joins produce;
+* scoring adds no shuffle of its own: the rehydrated pairs are
+  materialized once (clustering.collect_small); a set under the scoring
+  cap is scored on the driver and comes back as one Arrow local
+  relation, a larger one is scored by the pandas UDF over the partitions
+  the rehydration joins produce;
 * DET pairs do NOT pay the string-kernel cost for their decision — but the
   ensemble still runs on all pairs because the reference exposes per-field
   scores for every pair (int_match_scored.sql:69-73); the expensive string

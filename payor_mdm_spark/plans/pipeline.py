@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from payor_mdm_spark.operators.blocking import candidate_pairs
@@ -182,11 +182,15 @@ def run_incremental(
     * blocking re-runs fully (native column math over the staged table —
       necessary, because a delta record can join or split blocks of
       UNCHANGED records, e.g. sorted-neighborhood adjacency);
-    * pairwise scoring — the expensive Python-kernel stage — re-scores
+    * pairwise scoring — the expensive string-kernel stage — re-scores
       ONLY pairs that involve a changed record or are newly proposed;
       still-proposed pairs between unchanged records reuse their committed
       scores verbatim (scores are deterministic functions of the two
-      records), with matched_block_keys refreshed from the new pair table;
+      records), with matched_block_keys refreshed from the new pair table.
+      With metrics on, the rescore set is checkpointed once while an
+      observation counts it; a rescore set under the scoring cap is
+      scored on the driver (functions/ensemble.apply_ensemble), so a small
+      delta starts no Python worker;
     * the cheap downstream aggregates (candidates, CC, survivorship,
       golden, xref, hierarchy) rebuild through the same stage runner as a
       full run; staged and scored_pairs come from delta-aware builders.
@@ -241,11 +245,17 @@ def run_incremental(
         )
         to_score = pairs.join(reusable.select(*keys), keys, "left_anti")
         if collect_metrics:
-            # incremental lineage: how much Python-kernel work the delta
-            # cost — counted BEFORE the scored commit (to_score's lineage
-            # reads the old committed scored table) and without touching
-            # the kernel (the count needs only pair keys)
-            rescored_n = to_score.count()
+            # incremental lineage: how many pairs the delta rescored —
+            # observed while an eager checkpoint materializes the keys, so
+            # scoring reads them and the anti-join chain runs once. The
+            # observe sits at the top of the checkpointed plan: under a
+            # join, a side that AQE prunes as empty never reports, and
+            # Observation.get would wait forever.
+            seen = Observation()
+            to_score = to_score.observe(
+                seen, F.count(F.lit(1)).alias("rows")
+            ).localCheckpoint(eager=True)
+            rescored_n = seen.get["rows"]
         fresh = score_pairs(to_score, staged, abbrevs=abbrevs)
         # Recompute geo_contradiction for ALL reused pairs (not just
         # pre-upgrade stores missing the column): the recompute is exact for

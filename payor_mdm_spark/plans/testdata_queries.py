@@ -7,7 +7,7 @@ Column names/aliases match exactly; result values are either integral,
 string, or floats produced by identical float programs in both engines.
 
 Ops whose kernels are not SQL-expressible (xxhash64-seeded MinHash/SimHash
-/ hyperplane LSH, the pandas-UDF ensemble router) appear in QUERIES without
+/ hyperplane LSH, the ensemble string router) appear in QUERIES without
 an oracle — the driver records a rows-only check and pytest covers their
 semantics instead.
 """
@@ -468,7 +468,8 @@ def score_det_rules(spark, sf_dir):
     """,
 )
 def score_tax_transpose(spark, sf_dir):
-    """TAXID_TRANSPOSE kernel (U12) through the REAL ensemble pandas UDF,
+    """TAXID_TRANSPOSE kernel (U12) through the REAL ensemble (the kernel
+    on the driver under ensemble.LOCAL_SCORE_BYTES, else the pandas UDF),
     oracle-checked via positional digit comparison in SQL."""
     from payor_mdm_spark.functions.ensemble import apply_ensemble
 

@@ -74,11 +74,13 @@ def test_pair_metrics_closed_form():
     """The O(n) cluster-size formula in tools/eval_f1.py must equal the
     naive all-pairs enumeration (which it replaced to make n=300k sweeps
     feasible) on a fixture with splits, merges, and exact clusters."""
+    import os
     import sys
 
     import duckdb
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
     from eval_f1 import PAIR_METRICS_SQL
 
     con = duckdb.connect()

@@ -4,6 +4,7 @@ reference routing behaviors (11_ensemble_udfs.sql:530-641)."""
 import pytest
 from pyspark.sql import functions as F
 
+from payor_mdm_spark.functions import ensemble
 from payor_mdm_spark.functions import similarity as sim
 from payor_mdm_spark.functions.ensemble import apply_ensemble, route_addr, route_name
 
@@ -28,13 +29,35 @@ _SCHEMA = (
 )
 
 
+# the two scoring paths: the kernel on the driver (the default at these
+# sizes) and the Arrow pandas UDF (forced by a scoring cap of 0)
+CAPS = {"driver": ensemble.LOCAL_SCORE_BYTES, "udf": 0}
+
+
+def _on_each_path(build):
+    """{path: build()} with the scoring cap of each path in force."""
+    out = {}
+    for path, cap in CAPS.items():
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(ensemble, "LOCAL_SCORE_BYTES", cap)
+            out[path] = build()
+    return out
+
+
 @pytest.fixture(scope="module")
-def scored(spark):
-    # the DET/FUZZY split unions two branches, so output order is not input
-    # order — carry an index and sort the collect back to PAIRS order
+def scored_paths(spark):
+    # output order is not input order — carry an index and sort the
+    # collect back to PAIRS order
     rows = [(i, *p) for i, p in enumerate(PAIRS)]
     df = spark.createDataFrame(rows, "_i int, " + _SCHEMA)
-    return sorted(apply_ensemble(df).collect(), key=lambda r: r._i)
+    return _on_each_path(
+        lambda: sorted(apply_ensemble(df).collect(), key=lambda r: r._i)
+    )
+
+
+@pytest.fixture(scope="module")
+def scored(scored_paths):
+    return scored_paths["driver"]
 
 
 def test_name_scores_match_python_router(scored):
@@ -76,11 +99,11 @@ def test_digit_field_scores(scored):
             )
 
 
-def test_composite_weighting_renormalizes(scored):
+def test_composite_weighting_renormalizes(scored_paths):
     from payor_mdm_spark.config import FIELD_WEIGHTS
 
     w = FIELD_WEIGHTS
-    for row in scored:
+    for row in scored_paths["driver"] + scored_paths["udf"]:
         present = []
         if row.score_name is not None:
             present.append((row.score_name, w["name"]))
@@ -160,6 +183,13 @@ EDGE_PAIRS = [
      None, None, None, None),  # double space -> NOT identical -> UDF
     ("UNITED", "UNITEDX", "999", "999", "9-9 OAK", "9-9 OAK", "77", "77", "C", "C"),
     (None, None, None, None, None, None, None, None, None, None),
+    # routed rows with one field NULL or "": the kernel leaves that score
+    # NULL, which must reach Spark as NULL, not NaN
+    ("", "ACME HEALTH", None, None, "1 MAIN ST", "9 ELM RD", None, None, None, None),
+    (None, "ACME", "123456789", "123456789", "5 OAK AVE", "5 OAK AVENUE",
+     None, None, None, None),
+    ("ACME", "ACMEX", None, None, None, "5 OAK AVE", "5551234", "5551234", None, None),
+    ("ACME", "ACMEX", None, None, "", "", None, None, None, None),
 ]
 
 
@@ -170,9 +200,10 @@ _ROUTED = [
 
 
 def _plan_vs_kernel(spark, rows):
-    """apply_ensemble's routed columns next to a local reference that sends
-    EVERY row through the Python kernel and score_tax (no native fast
-    path), both in input order (pandas NaN compared as None)."""
+    """apply_ensemble's routed columns on each scoring path ({path:
+    rows}) next to a local reference that sends EVERY row through the
+    Python kernel and score_tax (no native fast path), all in input order
+    (pandas NaN compared as None)."""
     import pandas as pd
 
     from payor_mdm_spark.functions.ensemble import _string_scores_batch, score_tax
@@ -180,8 +211,10 @@ def _plan_vs_kernel(spark, rows):
     df = spark.createDataFrame(
         [(i, *r) for i, r in enumerate(rows)], "_i int, " + _SCHEMA
     )
-    got = [[r[c] for c in _ROUTED]
-           for r in sorted(apply_ensemble(df).collect(), key=lambda r: r._i)]
+    got = _on_each_path(lambda: [
+        [r[c] for c in _ROUTED]
+        for r in sorted(apply_ensemble(df).collect(), key=lambda r: r._i)
+    ])
 
     def col(k):
         return pd.Series([r[k] for r in rows], dtype=object)
@@ -198,19 +231,21 @@ def _plan_vs_kernel(spark, rows):
 
 def test_split_fast_path_equivalence(spark):
     """The DET/FUZZY split must be bit-identical to routing every row
-    through the kernel and score_tax (VERDICT r01 item 5)."""
+    through the kernel and score_tax (VERDICT r01 item 5), on both
+    scoring paths."""
     got, want = _plan_vs_kernel(spark, PAIRS + EDGE_PAIRS)
-    assert got == want
+    assert got == {path: want for path in CAPS}
 
 
-def test_split_fast_path_skips_udf_for_det3_shape(spark):
+def test_split_fast_path_skips_udf_for_det3_shape(spark, monkeypatch):
     """Identical-name identical-numbered-addr pairs (the DET-3 shape) must
-    be fast-path decidable, and the split plan must keep a SINGLE Arrow
-    UDF node over a single branch (r06: fast rows are masked to NULL UDF
-    inputs rather than filtered into a second Union branch, so the
-    upstream lineage is never evaluated twice)."""
+    be fast-path decidable, and above the scoring cap the split plan must
+    keep a SINGLE Arrow UDF node over a single branch (r06: fast rows are
+    masked to NULL UDF inputs rather than filtered into a second Union
+    branch, so the upstream lineage is never evaluated twice)."""
     from payor_mdm_spark.functions.ensemble import addr_fast_path, name_fast_path
 
+    monkeypatch.setattr(ensemble, "LOCAL_SCORE_BYTES", 0)
     df = spark.createDataFrame(PAIRS + EDGE_PAIRS, _SCHEMA)
     name_dec, _, _ = name_fast_path(F.col("name_a"), F.col("name_b"))
     addr_dec, _, _ = addr_fast_path(F.col("addr_a"), F.col("addr_b"))
@@ -255,7 +290,7 @@ def test_split_equivalence_whitespace_torture(spark):
     rows += [(a, b, None, None, None, None, None, None, None, None)
              for a in ws_names[:4] for b in ws_names[4:8]]
     got, want = _plan_vs_kernel(spark, rows)
-    assert got == want
+    assert got == {path: want for path in CAPS}
 
 
 def test_split_equivalence_seeded_fuzz(spark):
@@ -293,4 +328,34 @@ def test_split_equivalence_seeded_fuzz(spark):
         rows.append((a, b, ta, tb, aa, ab, None, None, None, None))
 
     got, want = _plan_vs_kernel(spark, rows)
-    assert got == want
+    assert got == {path: want for path in CAPS}
+
+
+def test_driver_path_plans_local_relation(spark):
+    """Under the scoring cap the kernel runs on the driver: the scored
+    frame is a one-partition Arrow local relation under the native tail,
+    with no Python node."""
+    df = spark.createDataFrame(PAIRS + EDGE_PAIRS, _SCHEMA)
+    scored = apply_ensemble(df)
+    optimized = scored._jdf.queryExecution().optimizedPlan().toString()
+    executed = scored._jdf.queryExecution().executedPlan().toString()
+    assert "LocalRelation" in optimized
+    assert "Python" not in executed and "ArrowEval" not in executed
+    assert scored.rdd.getNumPartitions() == 1
+
+
+def test_scoring_paths_give_equal_schemas(spark, monkeypatch):
+    """Both paths produce the same column types and nullability, also for
+    a non-nullable input column and an array column."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    df = spark.createDataFrame(
+        [(i, *p) for i, p in enumerate(PAIRS + EDGE_PAIRS)],
+        StructType([StructField("_i", LongType(), False)]
+                   + spark.createDataFrame([], _SCHEMA).schema.fields),
+    ).withColumn("keys", F.array(F.lit("k")))
+    driver = apply_ensemble(df)
+    monkeypatch.setattr(ensemble, "LOCAL_SCORE_BYTES", 0)
+    udf = apply_ensemble(df)
+    assert driver.schema == udf.schema
+    assert sorted(driver.collect()) == sorted(udf.collect())

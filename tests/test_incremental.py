@@ -220,3 +220,17 @@ def test_bridge_batch_replay_is_idempotent(spark, worlds, tmp_path):
     process_turn_batch(spark, store, b2, collect_metrics=False)
     assert _snapshot(store.read("golden"), None) == golden_once
     assert _snapshot(store.read("scored_pairs"), None) == scored_once
+
+
+def test_incremental_with_nothing_to_rescore(spark, worlds, tmp_path):
+    """A delta that rescores no pair (here an empty one) still finishes:
+    the observed rescore count reads 0 and every pair is reused."""
+    store = CheckpointStore(spark, str(tmp_path / "zero"))
+    base = run_pipeline(spark, worlds["base"], store, collect_metrics=False)
+    base_scored = _snapshot(base.tables["scored_pairs"], None)
+    inc = run_incremental(spark, worlds["delta"].limit(0), store,
+                          collect_metrics=True)
+    by_stage = {m["stage"]: m["rows"] for m in inc.metrics}
+    assert by_stage["incremental_rescored_pairs"] == 0
+    assert by_stage["incremental_reused_pairs"] == by_stage["scored_pairs"] > 0
+    assert _snapshot(inc.tables["scored_pairs"], None) == base_scored

@@ -9,8 +9,11 @@ EXACT-by-design full scans are explicitly allow-listed with the reason.
 
 from __future__ import annotations
 
+import pathlib
+
 import pytest
 
+REPO = pathlib.Path(__file__).resolve().parent.parent
 SF_DIR = "/root/testdata/sf0.001"
 
 # intentional full-compare baselines — each documented
@@ -25,7 +28,7 @@ def _queries():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "spark_entry", "/root/repo/__spark_entry__.py"
+        "spark_entry", REPO / "__spark_entry__.py"
     )
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)
@@ -62,8 +65,16 @@ def _assert_clean(name, df):
 
 
 @pytest.fixture(scope="module")
-def er_stage_frames(spark, tmp_path_factory):
+def hygiene_turns_path(tmp_path_factory):
     from payor_mdm_spark.datagen.transcripts import generate_world, write_world
+
+    out = tmp_path_factory.mktemp("hygiene_world")
+    turns_path, _ = write_world(generate_world(seed=7, n_entities=20), str(out))
+    return turns_path
+
+
+@pytest.fixture(scope="module")
+def er_stage_frames(spark, hygiene_turns_path):
     from payor_mdm_spark.operators.blocking import candidate_pairs
     from payor_mdm_spark.operators.candidates import build_candidates
     from payor_mdm_spark.operators.clustering import build_match_groups
@@ -74,9 +85,7 @@ def er_stage_frames(spark, tmp_path_factory):
     from payor_mdm_spark.operators.staging import stage_records
     from payor_mdm_spark.operators.survivorship import survive_groups
 
-    out = tmp_path_factory.mktemp("hygiene_world")
-    turns_path, _ = write_world(generate_world(seed=7, n_entities=20), str(out))
-    turns = spark.read.parquet(turns_path)
+    turns = spark.read.parquet(hygiene_turns_path)
     staged = stage_records(spark, rollup_conversations(turns)).cache()
     pairs = candidate_pairs(staged)
     scored = score_pairs(pairs, staged)
@@ -325,8 +334,9 @@ def test_kernel_holds_no_routing():
 
 
 # ---------------------------------------------------------------------------
-# A small docs run starts no Python worker: the MinHash exact verify and the
-# connected components finish on the driver, so no committed DOC_STAGES
+# A small run starts no Python worker: in the docs DAG the MinHash exact
+# verify and the connected components finish on the driver, in the ER DAG
+# the scoring kernel and the connected components do. So no committed stage
 # frame, and no frame checkpointed while building one, plans a Python
 # operator, and no Python RDD is built.
 # ---------------------------------------------------------------------------
@@ -337,9 +347,47 @@ PYTHON_PLAN_NODES = (
 )
 
 
-def test_small_docs_run_plans_no_python(spark, monkeypatch):
+def _optimized_plan(df):
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _assert_runs_no_python(spark, monkeypatch, what, run):
+    """Call ``run()``, which returns [(name, optimized plan)] for the
+    frames it committed, while recording the plan of every frame it
+    localCheckpoints and every Python RDD it builds; no plan may hold a
+    Python operator and no Python RDD may be built."""
     from pyspark.core.rdd import PipelinedRDD
 
+    # the session's concrete DataFrame class, which defines localCheckpoint
+    frame_cls = type(spark.range(0))
+    checkpointed = []
+    real_checkpoint = frame_cls.localCheckpoint
+
+    def recording_checkpoint(self, *args, **kwargs):
+        checkpointed.append(_optimized_plan(self))
+        return real_checkpoint(self, *args, **kwargs)
+
+    python_rdds = []
+    real_init = PipelinedRDD.__init__
+
+    def recording_init(self, *args, **kwargs):
+        python_rdds.append(type(self).__name__)
+        real_init(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording_checkpoint)
+    monkeypatch.setattr(PipelinedRDD, "__init__", recording_init)
+    plans = run()
+    assert checkpointed, f"{what} checkpointed no frame: the recording missed"
+    plans += [(f"checkpoint {i}", p) for i, p in enumerate(checkpointed)]
+    offenders = [
+        (name, node) for name, p in plans
+        for node in PYTHON_PLAN_NODES if node in p
+    ]
+    assert not offenders, f"Python operators in {what}: {offenders}"
+    assert not python_rdds, f"{what} built Python RDDs: {python_rdds}"
+
+
+def test_small_docs_run_plans_no_python(spark, monkeypatch):
     from payor_mdm_spark.plans.docs_pipeline import DOC_STAGES, run_docs_pipeline
 
     class CaptureStore:
@@ -352,36 +400,74 @@ def test_small_docs_run_plans_no_python(spark, monkeypatch):
         def read(self, name):
             return self.frames[name]
 
-    def plan(df):
-        return df._jdf.queryExecution().optimizedPlan().toString()
-
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    checkpointed = []
-    frame_cls = type(docs)
-    real_checkpoint = frame_cls.localCheckpoint
-
-    def recording_checkpoint(self, *args, **kwargs):
-        checkpointed.append(plan(self))
-        return real_checkpoint(self, *args, **kwargs)
-
-    python_rdds = []
-    real_init = PipelinedRDD.__init__
-
-    def recording_init(self, *args, **kwargs):
-        python_rdds.append(type(self).__name__)
-        real_init(self, *args, **kwargs)
-
-    monkeypatch.setattr(frame_cls, "localCheckpoint", recording_checkpoint)
-    monkeypatch.setattr(PipelinedRDD, "__init__", recording_init)
     store = CaptureStore()
-    run_docs_pipeline(spark, docs, store, collect_metrics=False)
 
-    assert sorted(store.frames) == sorted(DOC_STAGES)
-    plans = [(name, plan(store.frames[name])) for name in DOC_STAGES]
-    plans += [(f"checkpoint {i}", p) for i, p in enumerate(checkpointed)]
+    def run():
+        run_docs_pipeline(spark, docs, store, collect_metrics=False)
+        assert sorted(store.frames) == sorted(DOC_STAGES)
+        return [(name, _optimized_plan(store.frames[name]))
+                for name in DOC_STAGES]
+
+    _assert_runs_no_python(spark, monkeypatch, "a small docs run", run)
+
+
+def test_small_er_run_plans_no_python(spark, monkeypatch, tmp_path,
+                                      hygiene_turns_path):
+    """A full ER run, then an incremental one (the last two conversations
+    arrive as the delta), both with metrics on."""
+    from pyspark.sql import functions as F
+
+    from payor_mdm_spark.plans.pipeline import STAGES, run_incremental, run_pipeline
+    from payor_mdm_spark.sources.catalog import CheckpointStore
+
+    class RecordingStore(CheckpointStore):
+        def __init__(self, spark, root):
+            super().__init__(spark, root)
+            self.plans = []
+
+        def write(self, name, df, *args, **kwargs):
+            self.plans.append((name, _optimized_plan(df)))
+            super().write(name, df, *args, **kwargs)
+
+    turns = spark.read.parquet(hygiene_turns_path)
+    convs = sorted(r.conv_id for r in turns.select("conv_id").distinct().collect())
+    late = F.col("conv_id").isin(*convs[-2:])
+    store = RecordingStore(spark, str(tmp_path / "er"))
+
+    def run():
+        run_pipeline(spark, turns.filter(~late), store)
+        run_incremental(spark, turns.filter(late), store)
+        committed = [name for name, _ in store.plans]
+        assert all(committed.count(stage) == 2 for stage in STAGES), committed
+        return store.plans
+
+    _assert_runs_no_python(spark, monkeypatch, "a small ER run", run)
+
+
+# ---------------------------------------------------------------------------
+# Tools and tests find the checkout from their own __file__, so run from a
+# second checkout (a parent copy for an A/B, a copy with a patched
+# constant) they import, check and write that checkout, never another one.
+# No quoted absolute path in them may lead into a checkout. Pure source
+# scan, no Spark.
+# ---------------------------------------------------------------------------
+
+def test_tools_and_tests_hold_no_checkout_path():
+    import re
+
+    def into_checkout(literal):
+        path = pathlib.Path(literal)
+        return any((p / "__spark_entry__.py").is_file()
+                   for p in (path, *path.parents))
+
     offenders = [
-        (name, node) for name, p in plans
-        for node in PYTHON_PLAN_NODES if node in p
+        f"{path.relative_to(REPO)}: {literal}"
+        for folder in ("tools", "tests")
+        for path in sorted((REPO / folder).rglob("*"))
+        if path.is_file() and "__pycache__" not in path.parts
+        for literal in re.findall(r"[\"'](/[^\"'\s]*)",
+                                  path.read_text(errors="replace"))
+        if into_checkout(literal)
     ]
-    assert not offenders, f"Python operators in a small docs run: {offenders}"
-    assert not python_rdds, f"a small docs run built Python RDDs: {python_rdds}"
+    assert not offenders, f"hard-coded checkout path: {offenders}"

@@ -45,9 +45,10 @@ def test_decision_funnel(pipeline_run):
 def test_run_pipeline_cli(tmp_path, spark):
     """jobs/run_pipeline.py end-to-end via its main() (the spark-submit
     surface), generating a small world and writing checkpoints."""
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from jobs.run_pipeline import main
 
     out = str(tmp_path / "run")

@@ -14,7 +14,7 @@ The harness confound is removed by running HEAD's bench.py in BOTH
 checkouts (each importing its own payor_mdm_spark); queries only one side
 has are guarded out, and I/O is tmpfs in both arms.
 
-Usage: python tools/ab_bench.py <checkoutA> [checkoutB=/root/repo] [reps=3]
+Usage: python tools/ab_bench.py <checkoutA> [checkoutB=this checkout] [reps=3]
 Writes BENCH/ab_r3_r4.json.
 """
 
@@ -27,7 +27,7 @@ import subprocess
 import sys
 import time
 
-HEAD_REPO = "/root/repo"
+HEAD_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # Output path is overridable so a new round's A/B never clobbers a prior
 # round's committed evidence (BENCH/ab_r3_r4.json is round-4 record).
 OUT = os.environ.get(

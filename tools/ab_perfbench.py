@@ -3,10 +3,14 @@
     python3 tools/ab_perfbench.py PARENT CHANGE --workload docs_corpus \\
         --seeds 51-60 [--out ab.json]
 
-For each seed it runs ``perfbench/run.py --workload W --seed S --seconds N
---trace 0`` once in each checkout (cwd = the checkout, so each imports its
-own engine and benchmark), alternating which side runs first from pair to
-pair, so slow drift on the host hits both arms alike. N is the
+Before the first pair it makes one untimed warm-up run in each checkout
+(the first seed), reported apart and left out of the summary: the first
+``er_delta`` run in a checkout also builds its cached base, and the first
+run after a while reads a cold file cache. Then for each seed it runs
+``perfbench/run.py --workload W --seed S --seconds N --trace 0`` once in
+each checkout (cwd = the checkout, so each imports its own engine and
+benchmark), alternating which side runs first from pair to pair, so slow
+drift on the host hits both arms alike. N is the
 ``run_seconds`` of the parent's ``BENCHMARK.json``, the same for both arms,
 which also gives each metric's direction. Every result line is
 kept. For each end-to-end metric, plus ``error_rate`` (failed / attempted),
@@ -150,7 +154,17 @@ def main(argv=None) -> int:
     seeds = parse_seeds(args.seeds)
     better, seconds = benchmark_spec(checkouts["parent"])
 
-    pairs, failed = [], []
+    warmup, failed = {}, []
+    for arm in ARMS:
+        rec = run_once(checkouts[arm], args.workload, seeds[0], seconds)
+        warmup[arm] = rec
+        if "values" not in rec:
+            failed.append({"arm": f"{arm} warm-up", **rec})
+        print(f"warm-up {arm}: {rec['wall_s']} s wall, "
+              f"{'ok' if 'values' in rec else 'FAILED'}",
+              file=sys.stderr, flush=True)
+
+    pairs = []
     for i, seed in enumerate(seeds):
         order = ARMS if i % 2 == 0 else ARMS[::-1]
         pair = {"seed": seed, "first": order[0]}
@@ -166,13 +180,15 @@ def main(argv=None) -> int:
         pairs.append(pair)
 
     summary = summarize(pairs, better)
-    print(f"{args.workload}: {len(pairs)} pairs, seeds {seeds}")
+    print(f"{args.workload}: {len(pairs)} pairs, seeds {seeds}; untimed warm-up "
+          + ", ".join(f"{a} {warmup[a]['wall_s']} s" for a in ARMS))
     print(report(summary, failed))
     if args.out:
         with open(args.out, "w") as f:
             json.dump({"workload": args.workload, "seeds": seeds,
                        "checkouts": checkouts, "seconds": seconds,
-                       "pairs": pairs, "summary": summary}, f, indent=1)
+                       "warmup": warmup, "pairs": pairs,
+                       "summary": summary}, f, indent=1)
     return 1 if failed else 0
 
 

@@ -11,12 +11,13 @@ Usage: python tools/analyze_fp.py [n_entities] [master] [seed]
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from payor_mdm_spark.datagen.transcripts import generate_world, write_world
 from payor_mdm_spark.plans.pipeline import run_pipeline

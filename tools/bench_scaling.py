@@ -40,9 +40,12 @@ import os
 import subprocess
 import sys
 
+# `python -c` puts its working directory first on sys.path, so a snippet
+# run with cwd=REPO imports this checkout's engine
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 SCORE_SNIPPET = r"""
 import sys, time
-sys.path.insert(0, "/root/repo")
 from payor_mdm_spark.session import get_spark
 import pyspark.sql.functions as F
 from payor_mdm_spark.functions.ensemble import apply_ensemble
@@ -68,7 +71,6 @@ spark.stop()
 
 MAKE_PAIRS_SNIPPET = r"""
 import sys
-sys.path.insert(0, "/root/repo")
 from payor_mdm_spark.session import get_spark
 import pyspark.sql.functions as F
 n = int(sys.argv[1]); out = sys.argv[2]
@@ -97,7 +99,6 @@ spark.stop()
 
 PIPELINE_SNIPPET = r"""
 import json, sys, tempfile, time, os
-sys.path.insert(0, "/root/repo")
 from payor_mdm_spark.plans.pipeline import run_pipeline
 from payor_mdm_spark.session import get_spark
 from payor_mdm_spark.sources.catalog import CheckpointStore
@@ -124,7 +125,7 @@ spark.stop()
 def run_snippet(snippet: str, args: list[str]) -> dict:
     out = subprocess.run(
         [sys.executable, "-c", snippet, *args],
-        capture_output=True, text=True, timeout=3600, cwd="/root/repo",
+        capture_output=True, text=True, timeout=3600, cwd=REPO,
     )
     if out.returncode != 0:
         print(out.stderr[-3000:], file=sys.stderr)
@@ -142,7 +143,7 @@ def main() -> None:
 
     import tempfile
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from payor_mdm_spark.datagen.transcripts import generate_world, write_world
 
     world = generate_world(seed=42, n_entities=n_entities)
@@ -203,16 +204,16 @@ def main() -> None:
         "pipeline_scaling_efficiency": round(pipe_eff, 3),
     }
     print(json.dumps(summary))
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-    with open("/root/repo/BENCH/scaling.json", "w") as f:
+    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
+    with open(os.path.join(REPO, "BENCH", "scaling.json"), "w") as f:
         json.dump(summary, f, indent=1)
 
     stage_rows = "\n".join(
         f"| {st} | {p8['stages'][st]} | {p32['stages'][st]} |"
         for st in p8["stages"]
     )
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-    with open("/root/repo/BENCH/BASELINE.md", "w") as f:
+    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
+    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
         f.write(f"""# BENCH/BASELINE — measured results
 
 ## Scaling efficiency (north_rule: >= 0.8 from N to 4N executors)
@@ -292,7 +293,7 @@ the reference's 6-char-prefix key on templated payor names — hot blocks
 are already salted at MAX_BLOCK_SIZE, and the DET/FUZZY scoring split
 keeps the redundant candidates on the cheap native branch.
 """)
-        sp_path = "/root/repo/BENCH/pipeline_scale_point.json"
+        sp_path = os.path.join(REPO, "BENCH", "pipeline_scale_point.json")
         if os.path.exists(sp_path):
             with open(sp_path) as fj:
                 sp = json.load(fj)
@@ -373,7 +374,7 @@ bounds host-contention windows, which only ever slow a sample down):
                                 f"| {st} | {lo_st[st]} | {hi_st[st]} |"
                                 f" {lo_st[st] / hi_st[st]:.1f}x |\n"
                             )
-        ab_path = "/root/repo/BENCH/ab_r3_r4.json"
+        ab_path = os.path.join(REPO, "BENCH", "ab_r3_r4.json")
         if os.path.exists(ab_path):
             with open(ab_path) as fj:
                 ab = json.load(fj)
@@ -422,7 +423,7 @@ harness (tmpfs I/O) alternately (ABBA x{ab['reps']}) in one host session:
   within the within-arm spread — per-query detail in BENCH/ab_r3_r4.json.
 * Conclusion (derived from the numbers above): {verdict_line}.
 """)
-        sm_path = "/root/repo/BENCH/sample_mod_study.json"
+        sm_path = os.path.join(REPO, "BENCH", "sample_mod_study.json")
         if os.path.exists(sm_path):
             with open(sm_path) as fj:
                 sm = json.load(fj)
@@ -453,7 +454,7 @@ harness (tmpfs I/O) alternately (ABBA x{ab['reps']}) in one host session:
                 "exact-substring dedup targets survive even p=16 at ~200x "
                 "fewer shuffle rows than the char baseline.\n"
             )
-        f1_path = "/root/repo/BENCH/f1_sweep.json"
+        f1_path = os.path.join(REPO, "BENCH", "f1_sweep.json")
         if os.path.exists(f1_path):
             with open(f1_path) as fj:
                 sweep = json.load(fj)

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import decimal
 import math
+import os
 import sys
 import time
 
@@ -78,7 +79,7 @@ def main():
 
     import duckdb
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry_mod
     from payor_mdm_spark.session import get_spark
 

@@ -2,10 +2,12 @@
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> None:
@@ -50,7 +52,7 @@ def main() -> None:
         for f in df.schema.fields:
             lines.append(f"| {f.name} | {f.dataType.simpleString()} |")
         lines.append("")
-    with open("/root/repo/SCHEMAS.md", "w") as f:
+    with open(os.path.join(REPO, "SCHEMAS.md"), "w") as f:
         f.write("\n".join(lines))
     print("wrote SCHEMAS.md")
 

@@ -25,9 +25,12 @@ import subprocess
 import sys
 import time
 
+# `python -c` puts its working directory first on sys.path, so a snippet
+# run with cwd=REPO imports this checkout's engine
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 GEN_SNIPPET = r"""
 import json, os, sys
-sys.path.insert(0, "/root/repo")
 from payor_mdm_spark.session import get_spark
 from payor_mdm_spark.datagen.transcripts import distributed_world
 
@@ -46,7 +49,6 @@ spark.stop()
 
 PIPE_SNIPPET = r"""
 import json, os, sys, tempfile, time
-sys.path.insert(0, "/root/repo")
 from payor_mdm_spark.plans.pipeline import run_pipeline
 from payor_mdm_spark.session import get_spark
 from payor_mdm_spark.sources.catalog import CheckpointStore
@@ -81,7 +83,7 @@ def run_snippet(snippet: str, args: list[str], retries: int = 1) -> dict:
         try:
             out = subprocess.run(
                 [sys.executable, "-c", snippet, *args],
-                capture_output=True, text=True, timeout=7200, cwd="/root/repo",
+                capture_output=True, text=True, timeout=7200, cwd=REPO,
             )
         except subprocess.TimeoutExpired:
             # a hung sample is a failed attempt like a nonzero returncode —
@@ -153,8 +155,8 @@ def main() -> None:
         if hi == 4 * lo:
             eff = (best[lo]["seconds"] / best[hi]["seconds"]) / 4.0
             out[f"end_to_end_efficiency_{lo}_to_{hi}"] = round(eff, 3)
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-    with open("/root/repo/BENCH/pipeline_scale_point.json", "w") as f:
+    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
+    with open(os.path.join(REPO, "BENCH", "pipeline_scale_point.json"), "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps(out))
 

@@ -5,12 +5,20 @@ blocking_pairs exactly as run_pipeline does, then times, with the noop
 sink so no slice pays for parquet encoding unless stated:
 
   1. rehydration joins only (pairs x staged slim projections);
-  2. rehydration + native prep + ensemble UDF (full score_pairs frame);
+  2. rehydration + native prep + ensemble (full score_pairs frame);
   3. the committed write (parquet to tmpfs) of the scored frame.
 
+Each rep builds its frame inside the timed region: score_pairs evaluates
+and sizes the rehydrated pairs eagerly, and under the scoring cap
+(functions/ensemble.LOCAL_SCORE_BYTES) runs the kernel on the driver
+there and then. The first rep of a slice is the cold one (the first
+Python worker in the JVM boots in the UDF path's first rep).
+
 The JSON line also records the Spark core count (``cpus``: SPARK_GRAFT_CPUS,
-else the cores this process may run on), the blocking pair count and the
-median µs per pair of the score_pairs_noop slice.
+else the cores this process may run on), the blocking pair count, the
+median µs per pair of the score_pairs_noop slice, and ``driver_path``:
+whether score_pairs scored on the driver (an Arrow local relation) or in
+the pandas UDF.
 
 Usage: python tools/profile_scoring.py [--entities 30000] [--reps 2]
 """
@@ -79,11 +87,12 @@ def main() -> None:
            "gen_s": gen_s, "staged_s": staged_s, "blocking_s": blocking_s,
            "slices": {}}
 
-    def timeit(name, df, write=False):
+    def timeit(name, build, write=False):
         samples = []
         for _ in range(args.reps):
             spark.sparkContext.setJobDescription(name)
             t0 = time.time()
+            df = build()
             if write:
                 df.write.mode("overwrite").parquet(os.path.join(d, "out_" + name))
             else:
@@ -91,14 +100,17 @@ def main() -> None:
             samples.append(round(time.time() - t0, 2))
         out["slices"][name] = samples
         print(name, samples, file=sys.stderr, flush=True)
+        return df
 
-    timeit("rehydrate_noop", rehydrate_pairs(pairs, staged))
-    scored = score_pairs(pairs, staged)
-    timeit("score_pairs_noop", scored)
+    timeit("rehydrate_noop", lambda: rehydrate_pairs(pairs, staged))
+    scored = timeit("score_pairs_noop", lambda: score_pairs(pairs, staged))
+    out["driver_path"] = (
+        "LocalRelation" in scored._jdf.queryExecution().optimizedPlan().toString()
+    )
     out["score_pairs_noop_us_per_pair"] = round(
         statistics.median(out["slices"]["score_pairs_noop"]) / max(n_pairs, 1) * 1e6, 2
     )
-    timeit("score_pairs_write", scored, write=True)
+    timeit("score_pairs_write", lambda: score_pairs(pairs, staged), write=True)
     print(json.dumps(out), flush=True)
     shutil.rmtree(d, ignore_errors=True)
     spark.stop()

@@ -33,7 +33,8 @@ import random
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 WORDS = (
     "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo "
@@ -182,8 +183,8 @@ def main() -> None:
         },
         "configs": results,
     }
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-    with open("/root/repo/BENCH/sample_mod_study.json", "w") as f:
+    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
+    with open(os.path.join(REPO, "BENCH", "sample_mod_study.json"), "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps(out))
     spark.stop()
