@@ -6,10 +6,10 @@ data-characteristic strategy router with a weighted composite — as:
 
 * ONE Arrow batch kernel for the string-similarity fields (the name and
   address routers), returning a typed StructType so Catalyst can prune
-  struct fields. It runs on the driver over one collected Arrow table when
-  the pair frame fits under LOCAL_SCORE_BYTES (a small run then starts no
-  Python worker, whose boot would cost more than the pairs), else as an
-  Arrow-vectorized pandas UDF; and
+  struct fields. It runs as an Arrow-vectorized pandas UDF, or, for a
+  pair frame the caller knows is small (``apply_ensemble(on_driver=True)``),
+  on the driver over one collected Arrow table, so a small run starts no
+  Python worker, whose boot would cost more than the pairs; and
 * native column expressions for everything cheap (tax exact/transpose,
   phone / cms strategies, winner-take-max, composite weighting +
   renormalization), which stay inside WholeStageCodegen.
@@ -44,7 +44,6 @@ from pyspark.sql.types import (
 from payor_mdm_spark.config import ABBREVS, FIELD_WEIGHTS
 from payor_mdm_spark.functions import similarity as sim
 from payor_mdm_spark.functions.phonetic import phonetic_equal
-from payor_mdm_spark.operators.clustering import collect_small
 
 STRING_SCORES_SCHEMA = StructType(
     [
@@ -54,18 +53,6 @@ STRING_SCORES_SCHEMA = StructType(
         StructField("addr_strategy", StringType()),
     ]
 )
-
-# the largest rehydrated pair frame (Arrow bytes as collect_small sizes
-# it, ~635 B a pair, so ~1.6k pairs) that apply_ensemble scores on the
-# driver. score_pairs plus a noop write, driver kernel against the UDF
-# (cap 0), first rep cold then the median of 5 warm reps, one process per
-# arm and size on a 4-core host: 1,343 pairs cold 1.9 s vs 3.5 s, warm
-# 1.00 vs 1.13 s; 3,002 pairs 1.9 vs 2.9, warm 0.99 vs 1.16; 8,440 pairs
-# 2.5 vs 3.6, warm 1.22 vs 1.32; 19,510 pairs 3.6 vs 2.8, warm 1.95 vs
-# 1.24. The one-threaded kernel falls behind warm workers somewhere past
-# 3k pairs, so the cap stays under that; it covers an incremental delta
-# and a 100-entity full run (1,343 pairs).
-LOCAL_SCORE_BYTES = 1 << 20
 
 
 def _first_max(*candidates: tuple[float, str]) -> tuple[float, str]:
@@ -511,7 +498,8 @@ def composite_col(
 
 
 def apply_ensemble(
-    pairs: DataFrame, abbrevs: dict[str, str] | None = None
+    pairs: DataFrame, abbrevs: dict[str, str] | None = None,
+    on_driver: bool = False,
 ) -> DataFrame:
     """Add ensemble score columns to a rehydrated pair DataFrame.
 
@@ -528,15 +516,16 @@ def apply_ensemble(
     rather than a filter+union keeps the (join-heavy) upstream lineage
     evaluated once.
 
-    The frame, with that mask as a column, is evaluated once by
-    ``clustering.collect_small``. When it fits under LOCAL_SCORE_BYTES
-    the kernel runs on the driver over the collected Arrow table and the
-    scores go back as an Arrow local relation, so no Python worker
-    starts; above the cap the Arrow pandas UDF runs the same kernel over
-    the materialized frame. One native tail then scores tax, phone, cms
-    and the composite on either. Results are bit-identical to routing
-    every row through route_name / route_addr / score_tax on both paths
-    (pinned by tests/test_ensemble_spark.py).
+    ``on_driver``: collect the frame, with that mask as a column, as one
+    Arrow table, run the kernel over it in-process and return the scores
+    as an Arrow local relation, so no Python worker starts. Only for a
+    frame the caller knows is small (operators/scoring.score_pairs sets it
+    from a count of the pair keys, before rehydration); otherwise the
+    Arrow pandas UDF runs the same kernel inside the lazy plan. One native
+    tail then scores tax, phone, cms and the composite on either. Results
+    are bit-identical to routing every row through route_name /
+    route_addr / score_tax on both paths (pinned by
+    tests/test_ensemble_spark.py).
     """
     tax_s, tax_strat = tax_score_cols(
         F.col("exact_key_1_a"), F.col("exact_key_1_b")
@@ -547,16 +536,15 @@ def apply_ensemble(
     addr_dec, addr_s_fast, addr_strat_fast = addr_fast_path(
         F.col("addr_a"), F.col("addr_b")
     )
-    local, pairs = collect_small(
-        pairs.withColumn("_fast", name_dec & addr_dec), LOCAL_SCORE_BYTES
-    )
+    pairs = pairs.withColumn("_fast", name_dec & addr_dec)
     fast_cond = F.col("_fast")
     kernel_in = ("name_a", "name_b", "addr_a", "addr_b")
-    if local is not None:
+    if on_driver:
         import pyarrow as pa
         import pyarrow.compute as pc
         from pyspark.sql.pandas.types import to_arrow_schema
 
+        local = pairs.toArrow()
         # fast rows send NULL inputs, as F.when(~fast_cond, c) does below
         routed = pc.invert(local["_fast"])
         out = _string_scores_batch(

@@ -63,18 +63,17 @@ _ID = "source_record_id"
 LOCAL_COLLECT_BYTES = 32 << 20
 
 
-def collect_small(df: DataFrame, cap: int):
+def collect_small(df: DataFrame):
     """Evaluate ``df`` once and size it on the way -> (table, frame).
 
     ``df`` is eagerly localCheckpoint'ed while an observed aggregate
     counts its rows and the bytes of its variable-width columns (no extra
-    job, no shuffle). When that fits under ``cap`` bytes, ``table`` is the
-    checkpoint pulled as one pyarrow Table; otherwise it is None, no row
-    has left the executors, and the caller's distributed path reads
-    ``frame``, the checkpoint, instead of evaluating ``df`` again. A cap
-    of 0 returns (None, df) with no job. Each caller passes its own cap
-    (LOCAL_COLLECT_BYTES here)."""
-    if cap <= 0:
+    job, no shuffle). When that fits under LOCAL_COLLECT_BYTES, ``table``
+    is the checkpoint pulled as one pyarrow Table; otherwise it is None,
+    no row has left the executors, and the caller's distributed path
+    reads ``frame``, the checkpoint, instead of evaluating ``df`` again. A
+    cap of 0 returns (None, df) with no job."""
+    if LOCAL_COLLECT_BYTES <= 0:
         return None, df
     var = [b for b in map(_var_bytes, df.schema.fields) if b is not None]
     size = Observation()
@@ -88,7 +87,7 @@ def collect_small(df: DataFrame, cap: int):
     nbytes = got["rows"] * 8 * len(df.columns) + sum(
         got[f"b{i}"] or 0 for i in range(len(var))
     )
-    if nbytes > cap:
+    if nbytes > LOCAL_COLLECT_BYTES:
         return None, frame
     return frame.toArrow(), frame
 
@@ -250,7 +249,7 @@ def propagate_labels(
     )
     local, edges = collect_small(edges.select(
         a.cast(id_type).alias(f"{_ID}_a"), b.cast(id_type).alias(f"{_ID}_b")
-    ), LOCAL_COLLECT_BYTES)
+    ))
     if local is not None:
         import pyarrow as pa
 

@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from payor_mdm_spark.operators.blocking import _pairs_within_blocks, _with_signature
-from payor_mdm_spark.operators import clustering
+from payor_mdm_spark.operators.clustering import collect_small
 from payor_mdm_spark.operators.text_analysis import word_ngrams_col
 
 
@@ -302,10 +302,9 @@ def _minhash_exact_verify(
         # holds pairs_a for the broadcast): when they fit under the collect
         # cap, verify them in-process, so no Python worker boots and the
         # result is an Arrow local relation; else mapInPandas reads them
-        local, joined = clustering.collect_small(
+        local, joined = collect_small(
             b.join(F.broadcast(a.join(F.broadcast(survivors), "id_a")), "id_b")
-            .select("id_a", "id_b", "_ta", "_tb"),
-            clustering.LOCAL_COLLECT_BYTES,
+            .select("id_a", "id_b", "_ta", "_tb")
         )
         if local is not None:
             import pyarrow as pa

@@ -7,15 +7,16 @@ by deterministic rules (DET-1 exact-key, DET-2 cms-analog, DET-3 name+state;
 pairs, the weighted composite otherwise (:76-79).
 
 Spark-first performance choices (SURVEY §4):
-* scoring adds no shuffle of its own: the rehydrated pairs are
-  materialized once (clustering.collect_small); a set under the scoring
-  cap is scored on the driver and comes back as one Arrow local
-  relation, a larger one is scored by the pandas UDF over the partitions
-  the rehydration joins produce;
+* scoring adds no shuffle of its own to the rehydration: a pair set of at
+  most LOCAL_SCORE_PAIRS keys (counted before rehydration, so a larger
+  set is never rehydrated only to be sized) is collected once, scored on
+  the driver and comes back as one Arrow local relation; a larger one is
+  scored lazily by the pandas UDF over the partitions the rehydration
+  joins produce;
 * DET pairs do NOT pay the string-kernel cost for their decision — but the
   ensemble still runs on all pairs because the reference exposes per-field
   scores for every pair (int_match_scored.sql:69-73); the expensive string
-  strategies are confined to one pandas UDF with native fast paths
+  strategies are confined to one Arrow batch kernel with native fast paths
   (functions/ensemble.py);
 * only ~12 of the staged table's columns are read for scoring — Catalyst
   prunes the rest out of the scan (int_match_scored.sql:13-22 analog).
@@ -27,6 +28,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from payor_mdm_spark.functions.ensemble import apply_ensemble
+
+# the most pairs score_pairs scores on the driver. tools/profile_scoring.py
+# (score_pairs plus a noop write; first rep cold, then the median of 5
+# warm reps; one process per arm and size, 4-core host), driver kernel vs
+# pandas UDF: 1,343 pairs cold 1.17 vs 2.00 s, warm 0.60 vs 0.62; 3,002
+# pairs 1.20 vs 1.94, warm 0.71 vs 0.67; 5,763 pairs 1.51 vs 1.94, warm
+# 0.78 vs 0.70; 8,440 pairs 1.60 vs 2.07, warm 0.89 vs 0.79. The kernel
+# wins every cold call (no worker boot; in an ER run scoring is the only
+# Python work, so its first call is cold) and loses to warm workers past
+# about 3k pairs (an earlier run of the same probe: 0.64 vs 0.66 at 3,002,
+# 0.79 vs 0.75 at 5,763). The bound sits near that warm crossover, where
+# a cold call still saves ~0.5 s, and covers an incremental delta and a
+# 100-entity full run (1,343 pairs).
+LOCAL_SCORE_PAIRS = 4096
 
 _SCORING_FIELDS = [
     "name_norm", "exact_key_1", "exact_key_2", "addr_line_1", "city",
@@ -125,13 +140,37 @@ def add_geo_contradiction(scored: DataFrame, staged: DataFrame) -> DataFrame:
 
 
 def score_pairs(pairs: DataFrame, staged: DataFrame,
-                abbrevs: dict[str, str] | None = None) -> DataFrame:
+                abbrevs: dict[str, str] | None = None,
+                n_pairs: int | None = None) -> DataFrame:
     """Blocking pairs + staged records -> scored pairs.
 
     ``abbrevs``: abbreviation table for the ensemble router (None ->
     config.ABBREVS). The pipeline threads the seeded ABBREVIATION_DICT
     table through here so steward MERGE upserts change match results
-    without a code change (sources/steward.seed_abbreviation_dict)."""
+    without a code change (sources/steward.seed_abbreviation_dict).
+
+    ``n_pairs``: the row count of ``pairs`` when the caller already has it
+    (run_incremental observes it on its rescore set); otherwise at most
+    LOCAL_SCORE_PAIRS + 1 keys are collected here, and Spark stops
+    scanning partitions once it has them. A set of at most
+    LOCAL_SCORE_PAIRS pairs is scored on the driver, eagerly, from those
+    collected keys, so a lazy ``pairs`` is evaluated once; a larger one
+    returns the lazy pandas-UDF plan over ``pairs``."""
+    if n_pairs is None:
+        head = pairs.limit(LOCAL_SCORE_PAIRS + 1).collect()
+        n_pairs = len(head)
+        if n_pairs <= LOCAL_SCORE_PAIRS:
+            import pyarrow as pa
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            # the whole set, as an Arrow local relation
+            pairs = pairs.sparkSession.createDataFrame(
+                pa.Table.from_pylist(
+                    [r.asDict(recursive=True) for r in head],
+                    schema=to_arrow_schema(pairs.schema),
+                ),
+                pairs.schema,
+            )
     df = rehydrate_pairs(pairs, staged).withColumn("match_rule", det_rule_col())
     df = (
         df.withColumn("name_a", F.col("name_norm_a"))
@@ -139,7 +178,9 @@ def score_pairs(pairs: DataFrame, staged: DataFrame,
         .withColumn("addr_a", F.when(F.col("addr_line_1_a").isNotNull(), _addr_concat("a")))
         .withColumn("addr_b", F.when(F.col("addr_line_1_b").isNotNull(), _addr_concat("b")))
     )
-    scored = apply_ensemble(df, abbrevs=abbrevs)
+    scored = apply_ensemble(
+        df, abbrevs=abbrevs, on_driver=n_pairs <= LOCAL_SCORE_PAIRS
+    )
     scored = scored.withColumn(
         "overall_score",
         F.when(F.col("match_rule") != "FUZZY", F.lit(1.0)).otherwise(F.col("composite")),

@@ -187,10 +187,10 @@ def run_incremental(
       still-proposed pairs between unchanged records reuse their committed
       scores verbatim (scores are deterministic functions of the two
       records), with matched_block_keys refreshed from the new pair table.
-      With metrics on, the rescore set is checkpointed once while an
-      observation counts it; a rescore set under the scoring cap is
-      scored on the driver (functions/ensemble.apply_ensemble), so a small
-      delta starts no Python worker;
+      The rescore keys are checkpointed once while an observation counts
+      them; that count is the incremental_rescored_pairs metric and picks
+      the scoring path, so a small delta is scored on the driver
+      (operators/scoring.score_pairs) and starts no Python worker;
     * the cheap downstream aggregates (candidates, CC, survivorship,
       golden, xref, hierarchy) rebuild through the same stage runner as a
       full run; staged and scored_pairs come from delta-aware builders.
@@ -244,19 +244,20 @@ def run_incremental(
             )
         )
         to_score = pairs.join(reusable.select(*keys), keys, "left_anti")
-        if collect_metrics:
-            # incremental lineage: how many pairs the delta rescored —
-            # observed while an eager checkpoint materializes the keys, so
-            # scoring reads them and the anti-join chain runs once. The
-            # observe sits at the top of the checkpointed plan: under a
-            # join, a side that AQE prunes as empty never reports, and
-            # Observation.get would wait forever.
-            seen = Observation()
-            to_score = to_score.observe(
-                seen, F.count(F.lit(1)).alias("rows")
-            ).localCheckpoint(eager=True)
-            rescored_n = seen.get["rows"]
-        fresh = score_pairs(to_score, staged, abbrevs=abbrevs)
+        # the rescore set, materialized once: its observed count is the
+        # incremental lineage metric and sizes the set for score_pairs,
+        # which reads the checkpoint, so the anti-join chain runs once (it
+        # reads the old committed scored table, before the scored commit).
+        # The observe sits at the top of the checkpointed plan: under a
+        # join, a side that AQE prunes as empty never reports, and
+        # Observation.get would wait forever.
+        seen = Observation()
+        to_score = to_score.observe(
+            seen, F.count(F.lit(1)).alias("rows")
+        ).localCheckpoint(eager=True)
+        rescored_n = seen.get["rows"]
+        fresh = score_pairs(to_score, staged, abbrevs=abbrevs,
+                            n_pairs=rescored_n)
         # Recompute geo_contradiction for ALL reused pairs (not just
         # pre-upgrade stores missing the column): the recompute is exact for
         # reused pairs — their staged attributes are unchanged by definition

@@ -468,8 +468,7 @@ def score_det_rules(spark, sf_dir):
     """,
 )
 def score_tax_transpose(spark, sf_dir):
-    """TAXID_TRANSPOSE kernel (U12) through the REAL ensemble (the kernel
-    on the driver under ensemble.LOCAL_SCORE_BYTES, else the pandas UDF),
+    """TAXID_TRANSPOSE kernel (U12) through the REAL ensemble pandas UDF,
     oracle-checked via positional digit comparison in SQL."""
     from payor_mdm_spark.functions.ensemble import apply_ensemble
 

@@ -144,7 +144,7 @@ def test_store_backed_checkpointing_identical_components(
     assert written == {"cc_labels_0", "cc_labels_1"}  # >= 4 rounds -> both slots
 
 
-def test_collect_small_sizes_before_collecting(spark):
+def test_collect_small_sizes_before_collecting(spark, monkeypatch):
     # two long columns, a string column and an array<string> column: 8
     # bytes a value plus the strings' UTF-8 bytes ("é" is two), and each
     # array element at 8 bytes plus its UTF-8 bytes
@@ -153,19 +153,22 @@ def test_collect_small_sizes_before_collecting(spark):
         [(i, i + 1, "aé", ["x", "é"]) for i in range(100)],
         "a long, b long, s string, k array<string>",
     )
-    table, frame = clustering.collect_small(df, 5400)
+    monkeypatch.setattr(clustering, "LOCAL_COLLECT_BYTES", 5400)
+    table, frame = clustering.collect_small(df)
     assert table.num_rows == 100 and table.column("s")[0].as_py() == "aé"
     assert table.column("k")[0].as_py() == ["x", "é"]
     # one byte short: nothing is pulled, and the caller gets the
     # materialized frame for its distributed path
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None))
-    table, frame = clustering.collect_small(df, 5399)
+    monkeypatch.setattr(clustering, "LOCAL_COLLECT_BYTES", 5399)
+    table, frame = clustering.collect_small(df)
     assert table is None
     assert len(set(tracker.getJobIdsForGroup(None)) - before) == 1
     assert "LogicalRDD" in frame._jdf.queryExecution().optimizedPlan().toString()
     assert sorted(frame.collect()) == sorted(df.collect())
-    table, frame = clustering.collect_small(df, 0)
+    monkeypatch.setattr(clustering, "LOCAL_COLLECT_BYTES", 0)
+    table, frame = clustering.collect_small(df)
     assert table is None and frame is df
 
 

@@ -4,7 +4,6 @@ reference routing behaviors (11_ensemble_udfs.sql:530-641)."""
 import pytest
 from pyspark.sql import functions as F
 
-from payor_mdm_spark.functions import ensemble
 from payor_mdm_spark.functions import similarity as sim
 from payor_mdm_spark.functions.ensemble import apply_ensemble, route_addr, route_name
 
@@ -29,19 +28,14 @@ _SCHEMA = (
 )
 
 
-# the two scoring paths: the kernel on the driver (the default at these
-# sizes) and the Arrow pandas UDF (forced by a scoring cap of 0)
-CAPS = {"driver": ensemble.LOCAL_SCORE_BYTES, "udf": 0}
+# the two scoring paths: the kernel on the driver, as score_pairs runs it
+# for a small pair set, and the Arrow pandas UDF (the default)
+PATHS = {"driver": True, "udf": False}
 
 
 def _on_each_path(build):
-    """{path: build()} with the scoring cap of each path in force."""
-    out = {}
-    for path, cap in CAPS.items():
-        with pytest.MonkeyPatch.context() as mp:
-            mp.setattr(ensemble, "LOCAL_SCORE_BYTES", cap)
-            out[path] = build()
-    return out
+    """{path: build(on_driver)} for each scoring path."""
+    return {path: build(on_driver) for path, on_driver in PATHS.items()}
 
 
 @pytest.fixture(scope="module")
@@ -50,9 +44,9 @@ def scored_paths(spark):
     # collect back to PAIRS order
     rows = [(i, *p) for i, p in enumerate(PAIRS)]
     df = spark.createDataFrame(rows, "_i int, " + _SCHEMA)
-    return _on_each_path(
-        lambda: sorted(apply_ensemble(df).collect(), key=lambda r: r._i)
-    )
+    return _on_each_path(lambda on_driver: sorted(
+        apply_ensemble(df, on_driver=on_driver).collect(), key=lambda r: r._i
+    ))
 
 
 @pytest.fixture(scope="module")
@@ -211,9 +205,10 @@ def _plan_vs_kernel(spark, rows):
     df = spark.createDataFrame(
         [(i, *r) for i, r in enumerate(rows)], "_i int, " + _SCHEMA
     )
-    got = _on_each_path(lambda: [
+    got = _on_each_path(lambda on_driver: [
         [r[c] for c in _ROUTED]
-        for r in sorted(apply_ensemble(df).collect(), key=lambda r: r._i)
+        for r in sorted(apply_ensemble(df, on_driver=on_driver).collect(),
+                        key=lambda r: r._i)
     ])
 
     def col(k):
@@ -234,18 +229,17 @@ def test_split_fast_path_equivalence(spark):
     through the kernel and score_tax (VERDICT r01 item 5), on both
     scoring paths."""
     got, want = _plan_vs_kernel(spark, PAIRS + EDGE_PAIRS)
-    assert got == {path: want for path in CAPS}
+    assert got == {path: want for path in PATHS}
 
 
-def test_split_fast_path_skips_udf_for_det3_shape(spark, monkeypatch):
+def test_split_fast_path_skips_udf_for_det3_shape(spark):
     """Identical-name identical-numbered-addr pairs (the DET-3 shape) must
-    be fast-path decidable, and above the scoring cap the split plan must
+    be fast-path decidable, and on the UDF path the split plan must
     keep a SINGLE Arrow UDF node over a single branch (r06: fast rows are
     masked to NULL UDF inputs rather than filtered into a second Union
     branch, so the upstream lineage is never evaluated twice)."""
     from payor_mdm_spark.functions.ensemble import addr_fast_path, name_fast_path
 
-    monkeypatch.setattr(ensemble, "LOCAL_SCORE_BYTES", 0)
     df = spark.createDataFrame(PAIRS + EDGE_PAIRS, _SCHEMA)
     name_dec, _, _ = name_fast_path(F.col("name_a"), F.col("name_b"))
     addr_dec, _, _ = addr_fast_path(F.col("addr_a"), F.col("addr_b"))
@@ -290,7 +284,7 @@ def test_split_equivalence_whitespace_torture(spark):
     rows += [(a, b, None, None, None, None, None, None, None, None)
              for a in ws_names[:4] for b in ws_names[4:8]]
     got, want = _plan_vs_kernel(spark, rows)
-    assert got == {path: want for path in CAPS}
+    assert got == {path: want for path in PATHS}
 
 
 def test_split_equivalence_seeded_fuzz(spark):
@@ -328,15 +322,14 @@ def test_split_equivalence_seeded_fuzz(spark):
         rows.append((a, b, ta, tb, aa, ab, None, None, None, None))
 
     got, want = _plan_vs_kernel(spark, rows)
-    assert got == {path: want for path in CAPS}
+    assert got == {path: want for path in PATHS}
 
 
 def test_driver_path_plans_local_relation(spark):
-    """Under the scoring cap the kernel runs on the driver: the scored
-    frame is a one-partition Arrow local relation under the native tail,
-    with no Python node."""
+    """On the driver path the scored frame is a one-partition Arrow local
+    relation under the native tail, with no Python node."""
     df = spark.createDataFrame(PAIRS + EDGE_PAIRS, _SCHEMA)
-    scored = apply_ensemble(df)
+    scored = apply_ensemble(df, on_driver=True)
     optimized = scored._jdf.queryExecution().optimizedPlan().toString()
     executed = scored._jdf.queryExecution().executedPlan().toString()
     assert "LocalRelation" in optimized
@@ -344,7 +337,7 @@ def test_driver_path_plans_local_relation(spark):
     assert scored.rdd.getNumPartitions() == 1
 
 
-def test_scoring_paths_give_equal_schemas(spark, monkeypatch):
+def test_scoring_paths_give_equal_schemas(spark):
     """Both paths produce the same column types and nullability, also for
     a non-nullable input column and an array column."""
     from pyspark.sql.types import LongType, StructField, StructType
@@ -354,8 +347,7 @@ def test_scoring_paths_give_equal_schemas(spark, monkeypatch):
         StructType([StructField("_i", LongType(), False)]
                    + spark.createDataFrame([], _SCHEMA).schema.fields),
     ).withColumn("keys", F.array(F.lit("k")))
-    driver = apply_ensemble(df)
-    monkeypatch.setattr(ensemble, "LOCAL_SCORE_BYTES", 0)
+    driver = apply_ensemble(df, on_driver=True)
     udf = apply_ensemble(df)
     assert driver.schema == udf.schema
     assert sorted(driver.collect()) == sorted(udf.collect())

@@ -150,6 +150,73 @@ def test_match_groups_job_budget(spark, er_stage_frames):
     assert len(jobs) <= 12, f"build_match_groups ran {len(jobs)} jobs"
 
 
+def test_score_pairs_sizes_keys_before_rehydrating(
+    spark, er_stage_frames, monkeypatch
+):
+    """score_pairs picks its path from a bounded count of the pair keys.
+    Under LOCAL_SCORE_PAIRS it scores on the driver from the keys it
+    collected to count them, so a lazy pair frame is evaluated once;
+    above it, it runs only that bounded collect of keys and returns the
+    lazy pandas-UDF plan, so the rehydrated pairs are never checkpointed
+    or collected only to be sized; a count the caller already has runs
+    no job at all."""
+    from payor_mdm_spark.operators import scoring
+    from payor_mdm_spark.operators.blocking import candidate_pairs
+
+    pairs = er_stage_frames["blocking_pairs"].localCheckpoint(eager=True)
+    staged = er_stage_frames["staged"]
+    staged.count()  # fill the cache outside the counted region
+    n = pairs.count()
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs_of(run):
+        before = set(tracker.getJobIdsForGroup(None))
+        out = run()
+        return out, len(set(tracker.getJobIdsForGroup(None)) - before)
+
+    def by_pair(df):
+        return {(r.source_record_id_a, r.source_record_id_b): r.asDict()
+                for r in df.collect()}
+
+    small, small_jobs = jobs_of(lambda: scoring.score_pairs(pairs, staged))
+    assert "LocalRelation" in small._jdf.queryExecution().optimizedPlan().toString()
+    # fresh, unevaluated blocking plans: a frame collected before would
+    # reuse its shuffle stages
+    _, blocking_jobs = jobs_of(lambda: candidate_pairs(staged).collect())
+    from_lazy, lazy_jobs = jobs_of(
+        lambda: scoring.score_pairs(candidate_pairs(staged), staged)
+    )
+    assert lazy_jobs <= blocking_jobs + small_jobs, (lazy_jobs, blocking_jobs)
+    assert by_pair(from_lazy) == by_pair(small)
+    monkeypatch.setattr(scoring, "LOCAL_SCORE_PAIRS", n - 1)
+    # above the bound nothing is checkpointed or pulled as Arrow
+    frame_cls = type(pairs)
+    eager = []
+
+    def recording(name):
+        real = getattr(frame_cls, name)
+
+        def record(self, *args, **kwargs):
+            eager.append(name)
+            return real(self, *args, **kwargs)
+
+        return record
+
+    for name in ("localCheckpoint", "toArrow"):
+        monkeypatch.setattr(frame_cls, name, recording(name))
+    for kwargs in ({}, {"n_pairs": n}):
+        big, jobs = jobs_of(lambda: scoring.score_pairs(pairs, staged, **kwargs))
+        assert not eager, eager
+        assert (jobs == 0) == ("n_pairs" in kwargs), (kwargs, jobs)
+        assert "LocalRelation" not in (
+            big._jdf.queryExecution().optimizedPlan().toString()
+        )
+        assert big._jdf.queryExecution().executedPlan().toString().count(
+            "ArrowEvalPython"
+        ) == 1
+        assert by_pair(big) == by_pair(small)
+
+
 def test_docs_pipeline_stage_plans_clean(spark):
     from pyspark.sql import functions as F
 

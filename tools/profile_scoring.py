@@ -8,11 +8,11 @@ sink so no slice pays for parquet encoding unless stated:
   2. rehydration + native prep + ensemble (full score_pairs frame);
   3. the committed write (parquet to tmpfs) of the scored frame.
 
-Each rep builds its frame inside the timed region: score_pairs evaluates
-and sizes the rehydrated pairs eagerly, and under the scoring cap
-(functions/ensemble.LOCAL_SCORE_BYTES) runs the kernel on the driver
-there and then. The first rep of a slice is the cold one (the first
-Python worker in the JVM boots in the UDF path's first rep).
+Each rep builds its frame inside the timed region: score_pairs takes
+the pair keys eagerly, and for at most operators/scoring.LOCAL_SCORE_PAIRS
+pairs runs the kernel on the driver there and then. The first rep of a
+slice is the cold one (the first Python worker in the JVM boots in the
+UDF path's first rep).
 
 The JSON line also records the Spark core count (``cpus``: SPARK_GRAFT_CPUS,
 else the cores this process may run on), the blocking pair count, the
