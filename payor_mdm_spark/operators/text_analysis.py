@@ -1,6 +1,9 @@
 """Text analysis operators (training-data pipeline suite).
 
-All native column expressions (WholeStageCodegen end-to-end):
+All native column expressions, no Python. Not all are codegen'd: the
+higher-order functions over token arrays (filter, transform, aggregate)
+are CodegenFallback, evaluated interpreted, and keep the projection that
+holds them (analyze_documents, for one) out of WholeStageCodegen:
 
 * token_count        — whitespace tokens + a BPE-ish regex segment count.
 * quality_score      — length / punctuation-ratio / stopword-ratio /
@@ -15,9 +18,10 @@ All native column expressions (WholeStageCodegen end-to-end):
 Each operator is expressible in ANSI SQL too (see __spark_entry__.py
 oracle_sql) so correctness is oracle-checked against DuckDB.
 
-Word n-gram and shingle lambdas slice a projected token-array column, never
-a tokenizer expression: Spark cannot hoist an expression out of a lambda
-body, so slicing one re-tokenizes the document once per n-gram (O(words^2)).
+Token signals read a projected token-array column, never a tokenizer
+expression: Spark does not share one expression between the lambdas and
+columns that use it, so passing the expression re-tokenizes the document
+once per use, and once per n-gram inside a slicing lambda (O(words^2)).
 """
 
 from __future__ import annotations
@@ -71,42 +75,44 @@ def punct_ratio_col(text: Column) -> Column:
     return F.when(n > 0, punct.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
 
 
-def stopword_ratio_col(text: Column, stopwords: list[str] | None = None) -> Column:
+def stopword_ratio_col(toks: Column, stopwords: list[str] | None = None) -> Column:
+    """Share of the tokens in ``toks`` (a projected tokens_col column, see
+    the module doc) that are stopwords."""
     stops = stopwords or _EN
-    toks = tokens_col(text)
     hits = F.size(F.filter(toks, lambda t: t.isin(*stops)))
     return F.when(
         F.size(toks) > 0, hits.cast("double") / F.size(toks).cast("double")
     ).otherwise(F.lit(0.0))
 
 
-def mean_word_len_col(text: Column) -> Column:
-    toks = tokens_col(text)
+def mean_word_len_col(toks: Column) -> Column:
+    """Mean length of the tokens in the projected token column ``toks``."""
     total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
     return F.when(
         F.size(toks) > 0, total.cast("double") / F.size(toks).cast("double")
     ).otherwise(F.lit(0.0))
 
 
-def quality_score_col(text: Column) -> Column:
+def quality_score_col(text: Column, toks: Column) -> Column:
     """Heuristic doc quality in [0,1]: favors 20-2000 token docs, low punct
-    density, some stopwords, plausible mean word length."""
-    n_tok = token_count_col(text).cast("double")
+    density, some stopwords, plausible mean word length. ``toks`` is the
+    projected tokens_col(text) column."""
+    n_tok = F.size(toks).cast("double")
     len_score = F.least(n_tok / F.lit(20.0), F.lit(1.0)) * F.least(
         F.lit(2000.0) / F.greatest(n_tok, F.lit(1.0)), F.lit(1.0)
     )
     punct_score = F.lit(1.0) - F.least(punct_ratio_col(text) * 4.0, F.lit(1.0))
-    stop_score = F.least(stopword_ratio_col(text) * 5.0, F.lit(1.0))
-    mwl = mean_word_len_col(text)
+    stop_score = F.least(stopword_ratio_col(toks) * 5.0, F.lit(1.0))
+    mwl = mean_word_len_col(toks)
     mwl_score = F.when((mwl >= 2.5) & (mwl <= 10.0), F.lit(1.0)).otherwise(F.lit(0.3))
     return F.round(
         len_score * 0.3 + punct_score * 0.2 + stop_score * 0.3 + mwl_score * 0.2, 4
     )
 
 
-def lang_scores_col(text: Column) -> Column:
-    """Struct of per-language stopword-hit ratios."""
-    toks = tokens_col(text)
+def lang_scores_col(text: Column, toks: Column) -> Column:
+    """Struct of per-language stopword-hit ratios; ``toks`` is the projected
+    tokens_col(text) column."""
     n = F.greatest(F.size(toks), F.lit(1)).cast("double")
     def marker_hits(markers: list[str]) -> Column:
         # NB: the lambda must be unary — F.filter treats a second parameter
@@ -123,9 +129,9 @@ def lang_scores_col(text: Column) -> Column:
     return F.struct(*fields)
 
 
-def language_id_col(text: Column, min_score: float = 0.05) -> Column:
+def language_id_col(text: Column, toks: Column, min_score: float = 0.05) -> Column:
     """argmax over lang_scores; 'und' when nothing clears min_score."""
-    s = lang_scores_col(text)
+    s = lang_scores_col(text, toks)
     langs = list(LANG_MARKERS.keys()) + ["zh"]
     pairs = F.array(
         *[F.struct(s[lang].alias("score"), F.lit(lang).alias("lang")) for lang in langs]
@@ -150,17 +156,18 @@ def doc_fingerprint_col(toks: Column, shingle_words: int = 4) -> Column:
 
 
 def analyze_documents(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    t = F.col(text_col)
+    t, toks = F.col(text_col), F.col("_toks")
     return (
-        docs.withColumn("token_count", token_count_col(t))
+        docs.withColumn("_toks", tokens_col(t))
+        .withColumn("token_count", F.size(toks))
         .withColumn("subword_count", subword_count_col(t))
         .withColumn("punct_ratio", F.round(punct_ratio_col(t), 4))
-        .withColumn("stopword_ratio", F.round(stopword_ratio_col(t), 4))
-        .withColumn("quality_score", quality_score_col(t))
-        .withColumn("lang_pred", language_id_col(t))
+        .withColumn("stopword_ratio", F.round(stopword_ratio_col(toks), 4))
+        .withColumn("quality_score", quality_score_col(t, toks))
+        .withColumn("lang_pred", language_id_col(t, toks))
         .withColumn("_ftoks", tokens_col(F.regexp_replace(t, r"[^\w\s]", "")))
         .withColumn("fingerprint", doc_fingerprint_col(F.col("_ftoks")))
-        .drop("_ftoks")
+        .drop("_toks", "_ftoks")
     )
 
 
@@ -349,10 +356,11 @@ def mixture_plan(
         *[x for s, w in sorted(weights.items())
           for x in (F.lit(s), F.lit(float(w * total_budget_tokens)))]
     )
-    scored = docs.select(
+    toks = F.col("_toks")
+    scored = docs.withColumn("_toks", tokens_col(t)).select(
         id_col, source_col,
-        token_count_col(t).alias("token_count"),
-        quality_score_col(t).alias("quality_score"),
+        F.size(toks).alias("token_count"),
+        quality_score_col(t, toks).alias("quality_score"),
     )
     running = _partitioned_prefix_sum(
         scored, source_col,
@@ -396,8 +404,10 @@ def repetition_signals(
     and the share of the document's tokens covered by its single most
     frequent n-gram. High values flag boilerplate/spam for filtering.
 
-    One explode + two-level aggregation, all codegen: per-(doc, gram)
-    counts partial-combine map-side, then one row per doc comes back.
+    One explode + two-level aggregation: per-(doc, gram) counts
+    partial-combine map-side, then one row per doc comes back. The
+    aggregations are codegen'd; the n-gram transform feeding the explode
+    is a higher-order function and runs interpreted.
     """
     from payor_mdm_spark.operators.dedup import _split_tokens, _word_ngrams
 
@@ -778,12 +788,12 @@ def gopher_filter(
     math; output [id, keep, reasons] where reasons is a sorted array of
     failed rule names (empty when keep).
     """
-    t = F.col(text_col)
-    base = docs.select(
+    toks = F.col("_toks")
+    base = docs.withColumn("_toks", tokens_col(F.col(text_col))).select(
         F.col(id_col),
-        token_count_col(t).alias("_ntok"),
-        mean_word_len_col(t).alias("_mwl"),
-        stopword_ratio_col(t).alias("_stop"),
+        F.size(toks).alias("_ntok"),
+        mean_word_len_col(toks).alias("_mwl"),
+        stopword_ratio_col(toks).alias("_stop"),
     )
     rep = repetition_signals(docs, id_col=id_col, text_col=text_col)
     checks = [

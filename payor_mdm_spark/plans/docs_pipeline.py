@@ -44,6 +44,7 @@ def run_docs_pipeline(
     collect_metrics: bool = True,
     run_ts: str = "2026-01-01 00:00:00",
 ) -> RunResult:
+    from payor_mdm_spark.operators.blocking import _scan_splits_below
     from payor_mdm_spark.operators.dedup import (
         dedup_clusters, exact_dedup, minhash_dedup_pairs,
     )
@@ -55,9 +56,15 @@ def run_docs_pipeline(
     runner = StageRunner(spark, store, run_ts, resume, collect_metrics,
                          "docs_run_metrics")
 
+    # the text analysis is per-row interpreted work (its higher-order
+    # functions have no codegen): spread it over every core when the scan
+    # has fewer splits than that; at scale the guard turns itself off
+    parallelism = spark.sparkContext.defaultParallelism
+    analyzed = (docs.repartition(parallelism)
+                if _scan_splits_below(docs, parallelism) else docs)
     stats = runner.run(
         "doc_stats",
-        lambda: analyze_documents(docs).join(
+        lambda: analyze_documents(analyzed).join(
             repetition_signals(docs), "doc_id"
         ),
     )

@@ -1524,10 +1524,12 @@ def text_quality_score(spark, sf_dir):
     tokens; the Spark side must use the same formula (sum of token lengths
     == chars minus single separators only when text is single-spaced, which
     generated documents are)."""
-    from payor_mdm_spark.operators.text_analysis import quality_score_col
+    from payor_mdm_spark.operators.text_analysis import quality_score_col, tokens_col
 
     d = _t(spark, sf_dir, "documents").filter(F.length("text") > 0)
-    return d.select("doc_id", quality_score_col(F.col("text")).alias("quality_score"))
+    return d.withColumn("_toks", tokens_col(F.col("text"))).select(
+        "doc_id", quality_score_col(F.col("text"), F.col("_toks")).alias("quality_score")
+    )
 
 
 @query(

@@ -33,6 +33,16 @@ _DEFAULT_CONFS = {
     # wide/binary rows (multimodal blobs) cannot blow up a batch.
     "spark.sql.execution.arrow.maxRecordsPerBatch": "50000",
     "spark.sql.session.timeZone": "UTC",
+    # With ICU case mappings on (Spark 4.1's default), the first lower()/
+    # upper() in a JVM builds CollationAwareUTF8String's title-case table by
+    # calling ICU toTitleCase on all 1,114,112 code points: 1.44 s under a
+    # C1-only JIT, paid inside every cold run even when all input is ASCII.
+    # Off, lower()/upper() keep the same ASCII fast path and otherwise use
+    # the JVM's String.toLowerCase()/toUpperCase(). The two settings differ
+    # only where a code point is newer than the JVM's Unicode tables
+    # (tests/test_case_mapping.py); only initcap() differs more widely, and
+    # the engine never calls it.
+    "spark.sql.icu.caseMappings.enabled": "false",
     # Tame noisy event logs in the sandbox; harmless on a real cluster.
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),

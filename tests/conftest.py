@@ -36,3 +36,22 @@ def pipeline_run(spark, world, tmp_path_factory):
     store = CheckpointStore(spark, str(tmp_path_factory.mktemp("ckpt")))
     res = run_pipeline(spark, turns, store, collect_metrics=False)
     return {"res": res, "store": store}
+
+
+@pytest.fixture(scope="session")
+def check_committed_reads(spark):
+    """Assert that reading each committed table of a parquet-dialect store
+    starts no Spark job and gives the schema that inference gives."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def check(store):
+        names = sorted(n for n in os.listdir(store.root) if store.exists(n))
+        assert names
+        for name in names:
+            before = set(tracker.getJobIdsForGroup(None))
+            got = store.read(name).schema
+            assert set(tracker.getJobIdsForGroup(None)) == before, name
+            inferred = spark.read.parquet(os.path.join(store.root, name)).schema
+            assert got.json() == inferred.json(), name
+
+    return check

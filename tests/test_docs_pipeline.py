@@ -27,7 +27,7 @@ def corpus(spark):
     return d.unionByName(dupes).unionByName(near).cache()
 
 
-def test_end_to_end_shapes(spark, corpus, tmp_path):
+def test_end_to_end_shapes(spark, corpus, tmp_path, check_committed_reads):
     store = CheckpointStore(spark, str(tmp_path / "docs"))
     res = run_docs_pipeline(spark, corpus, store)
     t = res.tables
@@ -49,6 +49,7 @@ def test_end_to_end_shapes(spark, corpus, tmp_path):
     # metrics persisted with per-stage rows
     by_stage = {r.stage: r.rows for r in store.read("docs_run_metrics").collect()}
     assert set(by_stage) == set(DOC_STAGES)
+    check_committed_reads(store)
 
 
 def test_resume_and_determinism(spark, corpus, tmp_path):

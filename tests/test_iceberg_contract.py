@@ -205,3 +205,37 @@ def test_append_contract():
     s3 = _iceberg_store()  # table absent -> createOrReplace bootstrap
     s3.append("turns_raw", AppendRecordingDF(log2))
     assert log2 == [("createOrReplace", "mdm.master.turns_raw")]
+
+
+def test_parquet_dialect_reads_committed_schema(spark, tmp_path,
+                                                check_committed_reads):
+    """A read right after write() starts no schema-inference job and gives
+    the inferred schema; append() and drop() forget the schema, and a
+    partitioned table keeps inference (its column order)."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def read_jobs(store, name):
+        before = set(tracker.getJobIdsForGroup(None))
+        store.read(name)
+        return len(set(tracker.getJobIdsForGroup(None)) - before)
+
+    store = CheckpointStore(spark, str(tmp_path / "s"))
+    df = spark.range(10).selectExpr(
+        "id", "cast(id % 3 as string) as k", "array(id) as a",
+        "named_struct('x', id, 'y', cast(null as double)) as st",
+    )
+    store.write("t", df)
+    check_committed_reads(store)
+    assert store.read("t").count() == 10
+
+    store.append("t", df)
+    assert read_jobs(store, "t") == 1
+    assert store.read("t").count() == 20
+    store.write("t", df)
+    store.drop("t")
+    CheckpointStore(spark, store.root).write("t", df.select("k"))
+    assert store.read("t").columns == ["k"]
+
+    store.write("p", df.select("id", "k"), partition_by=["k"])
+    assert read_jobs(store, "p") == 1
+    assert store.read("p").columns == ["id", "k"]

@@ -32,6 +32,11 @@ def test_pairwise_f1_above_target(spark, world, pipeline_run):
     assert f1 >= 0.99, f"pairwise F1 {f1:.4f} below 0.99 target"
 
 
+def test_committed_tables_read_without_inference(pipeline_run,
+                                                check_committed_reads):
+    check_committed_reads(pipeline_run["store"])
+
+
 def test_candidate_contract(pipeline_run):
     cand = pipeline_run["res"].tables["match_candidates"]
     # unique candidate ids (match/schema.yml uniqueness)

@@ -288,6 +288,20 @@ def test_ngram_lambdas_slice_projected_tokens(spark):
     assert not offenders, f"n-gram lambda re-tokenizes the text: {offenders}"
 
 
+def test_analyze_documents_tokenizes_once(spark):
+    """The quality, stopword, word-length and language signals read one
+    projected token column: the plan splits the text three times (the
+    tokens, the subword pieces, the fingerprint tokens), not once per
+    signal."""
+    from payor_mdm_spark.operators.text_analysis import analyze_documents
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "b c d e f g")], "doc_id long, text string"
+    )
+    plan = analyze_documents(docs)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("split(") <= 3, plan
+
+
 # ---------------------------------------------------------------------------
 # The run-metrics tables reach the JVM as Arrow batches (a local relation),
 # not as a Python RDD that costs a Python-worker job per table. Covers the
